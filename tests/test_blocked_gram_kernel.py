@@ -11,10 +11,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from timeseriesfuser_spark.ops import similarity as S
+from timeseriesfuser_spark.ops.dedup import _window_cap
 from timeseriesfuser_spark.ops.similarity import (
+    DEFAULT_MAX_BLOCK,
     _blocked_pair_dots,
     _dot,
-    _split_hot_blocks,
     _sq_norm,
     quantized,
 )
@@ -54,7 +55,10 @@ def _join_formulation(df, threshold, max_block):
         quantized(F.col("embedding"), 1000).alias("__v"),
     ).withColumn("__n", _sq_norm(F.col("__v")))
     rel = rel.filter(F.col("__n") > 0)
-    rel, jkeys = _split_hot_blocks(rel, ["__b"], "id", max_block, "t")
+    rel = _window_cap(
+        rel, ["__b"], max_block, "t", split_id="id", default=DEFAULT_MAX_BLOCK
+    )
+    jkeys = ["__b", "__sub"]
     x, y = rel.alias("x"), rel.alias("y")
     dot = _dot(F.col("x.__v"), F.col("y.__v"))
     cos = F.round(

@@ -1,24 +1,15 @@
-"""Cap-ladder rungs PAST rung-0 saturation (VERDICT r10 #1).
-
-The rung-0 count-min probe proves "no hot bucket" only while the sketch
-bound (≈ N_block_rows / 8192 on uniform keys) stays at/under the cap;
-past that density the exact rungs 1-3 (bounded-cell counts → per-key
-counts in flagged cells → true-key resolve + anti-join) carry the
-guard. Here the corpus is sized so the bound EXCEEDS the cap (the same
-regime as ~80M+ block rows under the default 10k cap, reached cheaply
-with an explicit small cap), and the planted flood must still be
-dropped EXACTLY: every flood-only pair gone, every cold-bucket pair
-kept."""
-
-import logging
+"""The in-plan hot-bucket cap on a corpus dense enough that the old
+count-min probe could not short-circuit (~440k band-block rows against
+an explicit cap of 50 — the regime of ~80M+ block rows under the default
+10k cap). The planted flood must be dropped EXACTLY — every flood-only
+pair gone, every cold-bucket pair kept, drop counts observed on the
+query's own action — and a clean corpus must pair exactly as cap-off."""
 
 from pyspark.sql import functions as F
 
 
 def _corpus(spark):
-    # 55k unique docs → ~440k band-block rows at bands=8: the d1×w8192
-    # sketch's per-cell load (~54) sits ABOVE the cap below, so rung 0
-    # cannot short-circuit and rungs 1-3 must resolve exactly.
+    # 55k unique docs → ~440k band-block rows at bands=8
     base = spark.range(55_000).select(
         F.col("id").alias("doc_id"),
         F.concat_ws(
@@ -43,14 +34,14 @@ def _corpus(spark):
     return base.unionByName(flood).unionByName(planted)
 
 
-def test_flood_dropped_exactly_past_rung0(spark, caplog):
+def test_flood_dropped_exactly_past_rung0(spark):
     from timeseriesfuser_spark.ops.dedup import minhash_lsh_pairs
+    from timeseriesfuser_spark.ops.util import cache_scope, observed_metrics
 
     docs = _corpus(spark)
-    with caplog.at_level(logging.WARNING, logger="timeseriesfuser_spark.ops.dedup"):
-        pairs = minhash_lsh_pairs(
-            docs, threshold=0.5, max_bucket=50, cache=True
-        ).collect()
+    with cache_scope():
+        out = minhash_lsh_pairs(docs, threshold=0.5, max_bucket=50, cache=True)
+        pairs = out.collect()
     ids = {(r["id_a"], r["id_b"]) for r in pairs}
     # the planted identical pair in a COLD bucket survives
     assert (2_000_001, 2_000_002) in ids
@@ -60,22 +51,20 @@ def test_flood_dropped_exactly_past_rung0(spark, caplog):
         a >= 1_000_000 and a < 2_000_000 and b >= 1_000_000 and b < 2_000_000
         for a, b in ids
     )
-    # and the drop was LOUD: the rung-3 resolve names the hot buckets
-    msgs = [r.message for r in caplog.records if "hot bucket" in r.message]
-    assert msgs and "dropped 8 hot buckets" in msgs[-1]
-    # 8 bands × 200 members = 1600 member rows reported
-    assert "1600 member rows" in msgs[-1]
+    # and the drop is DATA on the query's own action: one hot bucket per
+    # band, 8 bands × 200 members = 1600 member rows
+    assert observed_metrics(out)["minhash_lsh_pairs.bucket_cap"] == {
+        "dropped_buckets": 8,
+        "dropped_rows": 1600,
+    }
 
 
-def test_no_flood_same_pairs_as_cap_off_past_rung0(spark, monkeypatch):
-    """Without a flood, the ladder — FORCED past rung 0: the narrow
-    sketch is pinned (the adaptive width would otherwise pick the wide
-    one for this non-file-backed input) and the cap sits below the
-    pigeonhole bound ceil(440k/8192) = 54, so the CMS can never prove
-    no-hot and rung 1 must run — changes NOTHING: pair set == cap-off."""
+def test_no_flood_same_pairs_as_cap_off_past_rung0(spark):
+    """Without a flood, the cap — at 50, below the density where a
+    sketch bound could prove no-hot — changes NOTHING: pair set ==
+    cap-off."""
     from timeseriesfuser_spark.ops import dedup
 
-    monkeypatch.setattr(dedup, "_CMS_WIDTH_LARGE", 8192)
     docs = _corpus(spark).filter(
         (F.col("doc_id") < 1_000_000) | (F.col("doc_id") >= 2_000_000)
     )
@@ -92,190 +81,3 @@ def test_no_flood_same_pairs_as_cap_off_past_rung0(spark, monkeypatch):
         ).collect()
     }
     assert on == off
-
-
-def test_adaptive_probe_width(spark, tmp_path, monkeypatch):
-    """_cms_probe_expr widens the rung-0 sketch ONLY on positive
-    evidence of a large input (big scan bytes, or more files than the
-    stat helper will touch); small file-backed AND unknown-size inputs
-    stay narrow — an unknown→wide default taxed the sf0.1 dedup
-    headlines +0.4-0.6 s each (bench A/B, round 17)."""
-    from timeseriesfuser_spark.ops import util
-    from timeseriesfuser_spark.ops.dedup import (
-        _CMS_WIDTH_LARGE,
-        _CMS_WIDTH_SMALL,
-        _cms_probe_expr,
-    )
-
-    def width_of(df):
-        expr = str(_cms_probe_expr(df, ["v"]))
-        for w in (_CMS_WIDTH_SMALL, _CMS_WIDTH_LARGE):
-            if repr(2.0 / w) in expr:
-                return w
-        raise AssertionError(f"no known width in {expr}")
-
-    p = tmp_path / "small.parquet"
-    spark.range(100).selectExpr("id AS v").write.parquet(str(p))
-    small_file = spark.read.parquet(str(p))
-    unknown = spark.range(100).selectExpr("id AS v")
-    assert width_of(small_file) == _CMS_WIDTH_SMALL
-    assert width_of(unknown) == _CMS_WIDTH_SMALL  # unknown stays narrow
-    # positive size evidence → wide
-    monkeypatch.setattr(util, "estimated_input_bytes", lambda df: 1 << 30)
-    assert width_of(small_file) == _CMS_WIDTH_LARGE
-    # too many files to stat (the 100 TB signature) → wide
-    monkeypatch.setattr(util, "estimated_input_bytes", lambda df: None)
-    monkeypatch.setattr(
-        type(unknown), "inputFiles", lambda self: ["f"] * 10_001
-    )
-    assert width_of(unknown) == _CMS_WIDTH_LARGE
-
-
-def test_size_hint_overrides_unknown_and_file_evidence(spark, tmp_path, monkeypatch):
-    """VERDICT r11 #1: the explicit ``size_hint`` channel. A derived
-    (inputFiles-less) relation hinted LARGE gets the wide sketch — the
-    100 TB post-join corpus no longer silently pays the +56%
-    saturated-rung tax — and a hint always WINS over file evidence in
-    both directions (the caller's row count is better information than
-    scan bytes)."""
-    from timeseriesfuser_spark.ops import util
-    from timeseriesfuser_spark.ops.dedup import (
-        _CMS_WIDE_HINT_ROWS,
-        _CMS_WIDTH_LARGE,
-        _CMS_WIDTH_SMALL,
-        _cms_probe_expr,
-    )
-
-    def width_of(df, hint):
-        expr = str(_cms_probe_expr(df, ["v"], size_hint=hint))
-        for w in (_CMS_WIDTH_SMALL, _CMS_WIDTH_LARGE):
-            if repr(2.0 / w) in expr:
-                return w
-        raise AssertionError(f"no known width in {expr}")
-
-    derived = spark.range(100).selectExpr("id AS v")  # inputFiles: []
-    assert width_of(derived, _CMS_WIDE_HINT_ROWS) == _CMS_WIDTH_LARGE
-    assert width_of(derived, _CMS_WIDE_HINT_ROWS - 1) == _CMS_WIDTH_SMALL
-    # a hint beats contradicting file evidence, both ways
-    monkeypatch.setattr(util, "estimated_input_bytes", lambda df: 1 << 40)
-    assert width_of(derived, 1000) == _CMS_WIDTH_SMALL
-    monkeypatch.setattr(util, "estimated_input_bytes", lambda df: 1)
-    assert width_of(derived, 10**9) == _CMS_WIDTH_LARGE
-
-
-def test_size_hint_threads_through_public_ops(spark, monkeypatch):
-    """The public ``size_hint`` params reach the rung-0 probe scaled by
-    each op's block fan-out (minhash ×bands, simhash ×chunks,
-    blocked-cosine/semantic ×1) — pinned by capturing the probe calls."""
-    from timeseriesfuser_spark.ops import dedup, similarity
-
-    seen = []
-    real = dedup._cms_probe_expr
-
-    def spy(blocks, key_cols, size_hint=None):
-        seen.append(size_hint)
-        return real(blocks, key_cols, size_hint)
-
-    monkeypatch.setattr(dedup, "_cms_probe_expr", spy)
-    # similarity imports the symbol inside _split_hot_blocks at call
-    # time via `from ... import _cms_probe_expr` — patch the module attr
-    # it resolves from (the dedup module), which the local import reads.
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma epsilon")],
-        "doc_id long, text string",
-    )
-    dedup.minhash_lsh_pairs(docs, bands=8, size_hint=5_000_000, cache=True).collect()
-    assert seen[-1] == 40_000_000
-    dedup.simhash_pairs(docs, max_hamming=3, size_hint=9_000_000, cache=True).collect()
-    assert seen[-1] == 36_000_000
-
-    emb = spark.createDataFrame(
-        [(1, 0, [1.0, 0.0]), (2, 0, [1.0, 0.01]), (3, 1, [0.0, 1.0])],
-        "vec_id long, label long, embedding array<double>",
-    )
-    similarity.blocked_cosine_pairs(
-        emb, block_col="label", threshold=0.5, size_hint=77_000_000
-    ).collect()
-    assert seen[-1] == 77_000_000
-    cents = emb.filter("vec_id < 2")
-    similarity.semantic_dedup_pairs(
-        emb, cents, threshold=0.5, size_hint=88_000_000
-    ).collect()
-    assert seen[-1] == 88_000_000
-
-
-def test_auto_size_evidence_reprobes_wide_and_short_circuits(
-    spark, monkeypatch
-):
-    """VERDICT r12 #3 — rung 0.5: a HINT-LESS derived relation whose
-    narrow rung-0 bound fails, but whose (already-paid) materialization
-    count measures large, re-probes ONCE with the count as the size
-    hint; on a clean corpus the wide bound passes and the ladder
-    short-circuits with the plan untouched — no rung-1 pass, no manual
-    size_hint needed. Thresholds scaled down so the 92M-row regime is
-    reproduced with 5k rows: the narrow sketch is pinned tiny (saturates
-    instantly) and the wide-hint bar lowered below the count."""
-    from timeseriesfuser_spark.ops import dedup
-
-    monkeypatch.setattr(dedup, "_CMS_WIDE_HINT_ROWS", 1_000)
-    monkeypatch.setattr(dedup, "_CMS_WIDTH_SMALL", 4)
-    seen = []
-    real = dedup._cms_probe_expr
-
-    def spy(blocks, key_cols, size_hint=None):
-        seen.append(size_hint)
-        return real(blocks, key_cols, size_hint)
-
-    monkeypatch.setattr(dedup, "_cms_probe_expr", spy)
-    blocks = spark.range(5_000).selectExpr("id AS k")  # derived, clean
-    out = dedup._cap_buckets(blocks, ["k"], 50, "t", eager_stats=True)
-    # two probes: the narrow one (no hint) then the auto-hinted wide one
-    assert seen == [None, 5_000]
-    # short-circuited: the input plan object itself comes back
-    assert out is blocks
-
-
-def test_auto_size_evidence_skipped_when_already_wide(spark, monkeypatch):
-    """No re-probe when the first probe already ran wide (caller hint) —
-    a failed wide bound means rung 1, not a redundant second sketch."""
-    from timeseriesfuser_spark.ops import dedup
-
-    monkeypatch.setattr(dedup, "_CMS_WIDE_HINT_ROWS", 1_000)
-    monkeypatch.setattr(dedup, "_CMS_WIDTH_LARGE", 4)  # wide saturates too
-    seen = []
-    real = dedup._cms_probe_expr
-
-    def spy(blocks, key_cols, size_hint=None):
-        seen.append(size_hint)
-        return real(blocks, key_cols, size_hint)
-
-    monkeypatch.setattr(dedup, "_cms_probe_expr", spy)
-    blocks = spark.range(5_000).selectExpr("id AS k")
-    out = dedup._cap_buckets(
-        blocks, ["k"], 50, "t", eager_stats=True, size_hint=2_000
-    )
-    assert seen == [2_000]  # one probe only; rungs 1+ carry on
-    # clean corpus: the exact rungs find nothing hot → plan untouched
-    assert out is blocks
-
-
-def test_auto_size_evidence_small_counts_never_reprobe(spark, monkeypatch):
-    """A genuinely small derived frame whose bound fails (tiny pinned
-    sketch) must go straight to the exact rungs — the re-probe fires
-    only on measured-large relations."""
-    from timeseriesfuser_spark.ops import dedup
-
-    monkeypatch.setattr(dedup, "_CMS_WIDTH_SMALL", 4)
-    seen = []
-    real = dedup._cms_probe_expr
-
-    def spy(blocks, key_cols, size_hint=None):
-        seen.append(size_hint)
-        return real(blocks, key_cols, size_hint)
-
-    monkeypatch.setattr(dedup, "_cms_probe_expr", spy)
-    blocks = spark.range(5_000).selectExpr("id AS k")
-    out = dedup._cap_buckets(blocks, ["k"], 50, "t", eager_stats=True)
-    assert seen == [None]  # count 5k < _CMS_WIDE_HINT_ROWS: no re-probe
-    assert out is blocks

@@ -9,17 +9,17 @@ Guards under test:
   hamming 0), never the chunk join;
 - srp_neardup_pairs excludes zero-norm vectors (cosine is defined 0, so
   they can never verify at threshold > 0) from the join entirely;
-- all three ops accept an opt-in ``max_bucket`` cap that drops oversized
-  buckets from candidate generation with a logged drop count.
+- all three ops accept a ``max_bucket`` cap that drops oversized
+  buckets from candidate generation, with the drop counts observed on the
+  query's own action (``<op>.bucket_cap``: dropped_buckets, dropped_rows).
 """
-
-import logging
 
 import pytest
 from pyspark.sql import functions as F
 
 from timeseriesfuser_spark.ops import dedup as D
 from timeseriesfuser_spark.ops import similarity as S
+from timeseriesfuser_spark.ops.util import observed_metrics
 
 N_EMPTY = 10_000
 
@@ -132,24 +132,28 @@ class TestMaxBucketCap:
                  (1001, "one unique document with its own words mostly")]
         return spark.createDataFrame(rows, ["doc_id", "text"])
 
-    def test_minhash_cap_drops_hot_bucket_and_logs(self, spark, caplog):
+    def test_minhash_cap_drops_hot_bucket_and_logs(self, spark):
         df = self._boilerplate_corpus(spark)
-        with caplog.at_level(logging.WARNING, logger="timeseriesfuser_spark.ops.dedup"):
-            out = D.minhash_lsh_pairs(df, max_bucket=50, cache=False)
-            rows = out.collect()
+        out = D.minhash_lsh_pairs(df, max_bucket=50, cache=False)
+        rows = out.collect()
         pairs = {(r.id_a, r.id_b) for r in rows}
         # the boilerplate flood is capped out; the unique near-dup pair stays
         assert (1000, 1001) in pairs
         assert all(a >= 1000 for a, _ in pairs)
-        assert any("bucket cap" in r.message for r in caplog.records)
+        # one 300-member bucket per band, counted on the query's action
+        assert observed_metrics(out)["minhash_lsh_pairs.bucket_cap"] == {
+            "dropped_buckets": 8, "dropped_rows": 8 * 300,
+        }
 
-    def test_simhash_cap(self, spark, caplog):
+    def test_simhash_cap(self, spark):
         df = self._boilerplate_corpus(spark)
-        with caplog.at_level(logging.WARNING, logger="timeseriesfuser_spark.ops.dedup"):
-            out = D.simhash_pairs(df, bits=48, max_bucket=50, cache=False)
-            rows = out.collect()
+        out = D.simhash_pairs(df, bits=48, max_bucket=50, cache=False)
+        rows = out.collect()
         assert all(r.id_a >= 1000 for r in rows)
-        assert any("simhash_pairs" in r.message for r in caplog.records)
+        # max_hamming=3 → 4 chunks, each with one 300-member bucket
+        assert observed_metrics(out)["simhash_pairs.bucket_cap"] == {
+            "dropped_buckets": 4, "dropped_rows": 4 * 300,
+        }
 
     def test_cap_none_identical_output(self, spark):
         df = self._boilerplate_corpus(spark, n=20)
@@ -162,7 +166,7 @@ class TestMaxBucketCap:
         with pytest.raises(ValueError):
             D.minhash_lsh_pairs(df, max_bucket=1, cache=False).collect()
 
-    def test_srp_cap(self, spark, caplog):
+    def test_srp_cap(self, spark):
         dim = 8
         # 200 identical vectors -> every chunk bucket holds 200
         rows = [(i, [1.0] * dim) for i in range(200)]
@@ -171,20 +175,21 @@ class TestMaxBucketCap:
         # hot buckets — the cap must drop the flood but keep this pair
         rows += [(900, [-1.0] * dim), (901, [-1.01] * dim)]
         df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-        with caplog.at_level(logging.WARNING, logger="timeseriesfuser_spark.ops.dedup"):
-            out = S.srp_neardup_pairs(df, threshold=0.9, max_bucket=50, cache=False)
-            pairs = {(r.id_a, r.id_b) for r in out.collect()}
+        out = S.srp_neardup_pairs(df, threshold=0.9, max_bucket=50, cache=False)
+        pairs = {(r.id_a, r.id_b) for r in out.collect()}
         assert (900, 901) in pairs
         assert all(a >= 900 for a, _ in pairs)
-        assert any("srp_neardup_pairs" in r.message for r in caplog.records)
+        # max_hamming=2 → 3 chunks, each with one 200-member bucket
+        assert observed_metrics(out)["srp_neardup_pairs.bucket_cap"] == {
+            "dropped_buckets": 3, "dropped_rows": 3 * 200,
+        }
 
 
 class TestDefaultOnCap:
     """Round-14: the cap is DEFAULT-ON ("auto" → DEFAULT_MAX_BUCKET) —
     an identical-boilerplate flood is bounded under default arguments."""
 
-    def test_minhash_flood_bounded_under_defaults(self, spark, caplog, monkeypatch):
-        import logging
+    def test_minhash_flood_bounded_under_defaults(self, spark, monkeypatch):
         monkeypatch.setattr(D, "DEFAULT_MAX_BUCKET", 50)
         n = 200
         rows = [(i, "the same boilerplate text repeated in every doc body") for i in range(n)]
@@ -193,15 +198,14 @@ class TestDefaultOnCap:
             (1001, "a genuinely unique document about marmots and glaciers!"),
         ]
         df = spark.createDataFrame(rows, ["doc_id", "text"])
-        with caplog.at_level(logging.INFO, logger="timeseriesfuser_spark.ops.dedup"):
-            pairs = {
-                (r.id_a, r.id_b)
-                for r in D.minhash_lsh_pairs(df).collect()  # ALL defaults
-            }
+        out = D.minhash_lsh_pairs(df)  # ALL defaults
+        pairs = {(r.id_a, r.id_b) for r in out.collect()}
         assert (1000, 1001) in pairs
         assert all(a >= 1000 for a, _ in pairs), "flood pairs not bounded"
-        # never silent: cached default path logs measured drop counts
-        assert any("bucket cap" in r.message for r in caplog.records)
+        # never silent: the default path observes measured drop counts
+        assert observed_metrics(out)["minhash_lsh_pairs.bucket_cap"] == {
+            "dropped_buckets": 8, "dropped_rows": 8 * n,
+        }
 
     def test_explicit_none_disables(self, spark, monkeypatch):
         monkeypatch.setattr(D, "DEFAULT_MAX_BUCKET", 50)

@@ -490,9 +490,9 @@ def test_minhash_threads_footprint_to_caches(spark, monkeypatch):
     seen = []
     real = dedup._maybe_cache
 
-    def spy(df, cache, materialize=True, footprint_bytes=None):
+    def spy(df, cache, materialize=True, footprint_bytes=None, **kw):
         seen.append(footprint_bytes)
-        return real(df, cache, materialize, footprint_bytes)
+        return real(df, cache, materialize, footprint_bytes, **kw)
 
     monkeypatch.setattr(dedup, "_maybe_cache", spy)
     base = {
@@ -502,10 +502,10 @@ def test_minhash_threads_footprint_to_caches(spark, monkeypatch):
         ).collect()
     }
     assert base == {(1, 2)}
-    # no hint, no file evidence → deferred-evidence mode (r20): built
-    # unpersisted, then persisted with the MEASURED rung-0 footprint
-    assert seen[:2] == [None, None]
-    assert seen[-2:] == [dedup._lsh_measured_footprint(3 * 8, 8)] * 2
+    # no hint, no file evidence → measured-evidence mode (r20): counted
+    # unpersisted, then both caches persisted with the MEASURED footprint
+    assert seen[0] is None
+    assert seen[-2:] == [dedup._cache_footprint(None, 3 * 8, 48 + 400 / 8)] * 2
 
     seen.clear()
     monkeypatch.setattr(dedup, "_storage_budget_bytes", lambda s: 10)

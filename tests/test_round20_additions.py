@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 def _derived_docs(spark, n=400):
     """A DERIVED relation: post-join, no input files, no size hint —
-    exactly the shape whose footprint `_lsh_cache_footprint` cannot see."""
+    exactly the shape whose footprint `_cache_footprint` cannot see."""
     left = spark.range(n).select(F.col("id").alias("doc_id"))
     right = spark.range(n).select(
         F.col("id").alias("doc_id"),
@@ -43,9 +43,9 @@ def test_hintless_derived_relation_downgrades_instead_of_persisting(
     seen = []
     real = dedup._maybe_cache
 
-    def spy(df, cache, materialize=True, footprint_bytes=None):
+    def spy(df, cache, materialize=True, footprint_bytes=None, **kw):
         seen.append((cache, footprint_bytes))
-        return real(df, cache, materialize, footprint_bytes)
+        return real(df, cache, materialize, footprint_bytes, **kw)
 
     monkeypatch.setattr(dedup, "_maybe_cache", spy)
     monkeypatch.setattr(dedup, "_storage_budget_bytes", lambda s: 1)
@@ -59,11 +59,11 @@ def test_hintless_derived_relation_downgrades_instead_of_persisting(
             ).collect()
         }
     assert pairs == {(1_000_001, 1_000_002)}
-    # _banded_relation built UNPERSISTED (cache=False, no evidence), then
-    # the deferred decision ran with the MEASURED footprint
-    assert seen[0] == (False, None) and seen[1] == (False, None)
-    mfp = dedup._lsh_measured_footprint(402 * 8, 8)
-    assert seen[2:] == [(True, mfp), (True, mfp)]
+    # _banded_relation asked with NO evidence, then the decision for both
+    # caches ran with the MEASURED footprint
+    assert seen[0] == (True, None)
+    mfp = dedup._cache_footprint(None, 402 * 8, 48 + 400 / 8)
+    assert seen[1:] == [(True, mfp), (True, mfp)]
     assert any("persist SKIPPED" in r.message for r in caplog.records)
 
 
@@ -77,15 +77,15 @@ def test_hintless_derived_relation_persists_within_budget(spark, monkeypatch):
     seen = []
     real = dedup._maybe_cache
 
-    def spy(df, cache, materialize=True, footprint_bytes=None):
-        out = real(df, cache, materialize, footprint_bytes)
+    def spy(df, cache, materialize=True, footprint_bytes=None, **kw):
+        out = real(df, cache, materialize, footprint_bytes, **kw)
         seen.append((cache, footprint_bytes, out.storageLevel.useMemory))
         return out
 
     monkeypatch.setattr(dedup, "_maybe_cache", spy)
     with cache_scope():
         dedup.minhash_lsh_pairs(docs, n=1, threshold=0.5, cache=True).collect()
-        mfp = dedup._lsh_measured_footprint(50 * 8, 8)
+        mfp = dedup._cache_footprint(None, 50 * 8, 48 + 400 / 8)
         assert (True, mfp, True) in seen  # deferred persist fired
 
 
@@ -108,9 +108,9 @@ def test_between_defers_per_side(spark, monkeypatch, tmp_path):
     seen = []
     real = dedup._maybe_cache
 
-    def spy(df, cache, materialize=True, footprint_bytes=None):
+    def spy(df, cache, materialize=True, footprint_bytes=None, **kw):
         seen.append((cache, footprint_bytes))
-        return real(df, cache, materialize, footprint_bytes)
+        return real(df, cache, materialize, footprint_bytes, **kw)
 
     monkeypatch.setattr(dedup, "_maybe_cache", spy)
     with cache_scope():
@@ -121,9 +121,9 @@ def test_between_defers_per_side(spark, monkeypatch, tmp_path):
             ).collect()
         }
     assert got == {(900, 1)}
-    # new side: two (False, None) builds then a deferred measured persist
-    assert (False, None) in seen
-    mfp_new = dedup._lsh_measured_footprint(31 * 8, 8)
+    # new side: asked with no evidence, then a measured persist
+    assert (True, None) in seen
+    mfp_new = dedup._cache_footprint(None, 31 * 8, 48 + 400 / 8)
     assert (True, mfp_new) in seen
     # ref side: file-backed → non-deferred, footprint from scan bytes
     fb = [fp for c, fp in seen if c is True and fp not in (None, mfp_new)]

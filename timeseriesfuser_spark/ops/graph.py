@@ -56,7 +56,8 @@ def build_edges(
     self-join emitting C(k,2) pairs per group, one distinct on the pair
     grain — all hash-shuffles on their natural keys. A group with k
     items emits k²/2 pairs; cap pathological groups upstream (the same
-    quadratic-flood argument as the LSH ``max_bucket``).
+    quadratic-flood argument as the LSH family's in-plan bucket cap,
+    ``ops.dedup._window_cap``).
     """
     from pyspark import StorageLevel
 
@@ -414,17 +415,15 @@ def shortest_hops(
         e = e.unionAll(
             e.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst"))
         )
-    e = track_persist(
-        e.distinct()
-        .repartition("__src")
-        .sortWithinPartitions("__src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # materialize before the first level is planned, so the cached
-    # hash(__src) layout is visible to every level's join (a lazy persist
-    # is an unfinished AdaptiveSparkPlan — unknown partitioning — and
-    # level 1 would re-shuffle the edges; see pagerank)
-    e.count()
+    e = e.distinct().repartition("__src").sortWithinPartitions("__src")
+    if max_hops > 0:
+        e = track_persist(e.persist(StorageLevel.MEMORY_AND_DISK))
+        # materialize before the first level is planned, so the cached
+        # hash(__src) layout is visible to every level's join (a lazy
+        # persist is an unfinished AdaptiveSparkPlan — unknown
+        # partitioning — and level 1 would re-shuffle the edges; see
+        # pagerank). max_hops=0 never reads the edges: no job on them.
+        e.count()
 
     level, _ = iter_ckpt(
         seeds.select(F.col(seeds.columns[0]).alias("id"))
@@ -745,6 +744,7 @@ def hits_scores(
             # previous hub's last reader was the previous araw (ran when
             # the previous auth checkpointed)
             free_ckpt(prev_auth_handle)
+            prev_auth_handle = None
             free_ckpt(prev_hub_handle)
             prev_hub_handle = None
         else:

@@ -475,21 +475,21 @@ def srp_neardup_pairs(
     straggler task for guaranteed-empty output. Output-identical, plan
     bounded. ``max_bucket`` defaults to the family-wide "auto" cap
     (``ops.dedup.DEFAULT_MAX_BUCKET``): chunk buckets larger than the
-    cap are dropped with a logged count when cached, a logged notice
-    otherwise (``ops.dedup._cap_buckets``); ``None`` disables.
+    cap are dropped in the plan and counted as the observed metric
+    ``srp_neardup_pairs.bucket_cap`` (``ops.dedup._window_cap``);
+    ``None`` disables.
 
     Scale: one broadcast plane join + one groupBy for signatures; the
     candidate join touches only chunk-bucket collisions, never the corpus
     square. Output (id_a, id_b, hamming, cosine), id_a < id_b.
     """
-    from timeseriesfuser_spark.ops.dedup import _cap_buckets
+    from timeseriesfuser_spark.ops.dedup import _window_cap
 
     spark = df.sparkSession
     # materialize=False: the dim probe right below computes ONE cached
-    # partition (limit-1), and the blocks relation's eager materializer
-    # (count or cap probe) fills the rest through this parent — a
-    # separate full count was a redundant pass (the minhash darr lesson,
-    # r10).
+    # partition (limit-1), and the blocks relation's eager count fills
+    # the rest through this parent — a separate full count was a
+    # redundant pass (the minhash darr lesson, r10).
     v = _maybe_cache(
         spread_kernel_input(df).select(
             F.col(id_col).alias("id"), quantized(F.col(vec_col), scale).alias("v")
@@ -522,11 +522,9 @@ def srp_neardup_pairs(
             "id", "sh", F.col("cc.chunk").alias("chunk"), F.col("cc.ckey").alias("ckey")
         ),
         cache,
-        materialize=not (cache and max_bucket is not None),
     )
-    blocks = _cap_buckets(
-        blocks, ["chunk", "ckey"], max_bucket, "srp_neardup_pairs",
-        eager_stats=cache,
+    blocks = _window_cap(
+        blocks, ["chunk", "ckey"], max_bucket, "srp_neardup_pairs"
     )
     a, b = blocks.alias("a"), blocks.alias("b")
     xor = F.col("a.sh").bitwiseXOR(F.col("b.sh"))
@@ -578,118 +576,6 @@ def _maybe_cache(df: DataFrame, cache: bool, materialize: bool = True) -> DataFr
 #: are SPLIT (not dropped — SemDeDup blocks carry real recall), bounding
 #: per-sub-block cost at cap²·dim.
 DEFAULT_MAX_BLOCK = 10_000
-
-
-def _split_hot_blocks(
-    rel: DataFrame,
-    key_cols: list,
-    id_col: str,
-    max_block,
-    op_name: str,
-    size_hint=None,
-) -> tuple[DataFrame, list]:
-    """Quadratic-flood guard for blocked pairwise ops — DEFAULT-ON.
-
-    Any block-keyed self-join is quadratic PER BLOCK. Blocks larger than
-    the cap are split into ``ceil(n/cap)`` deterministic sub-blocks
-    (``pmod(xxhash64(id), n_sub)``) and the join key becomes
-    ``(block, __sub)``: per-task cost is bounded by ``cap²``, exactness
-    is preserved for every block at/under the cap, and pairs whose
-    endpoints land in different sub-blocks of a HOT block are skipped —
-    a RECALL cap, logged at WARNING with the affected block/row counts,
-    never silent. (Splitting a hot cluster is just finer clustering —
-    the same approximation dial SemDeDup's k already is; the LSH family
-    drops hot buckets instead because a flooded signature bucket carries
-    no recall worth keeping.)
-
-    - ``max_block="auto"`` (default): cap at :data:`DEFAULT_MAX_BLOCK`.
-    - explicit int: cap at that value.
-    - ``max_block=None``: opt-out, relation returned untouched.
-
-    Returns ``(relation, join_key_cols)``. The hot-block probe is the
-    ``_cap_buckets`` rung-0 pattern: a depth-1 count-min sketch of the
-    block key PIGGYBACKED via ``Observation`` on one ``count()`` — the
-    same job that materializes the caller's (not-yet-materialized)
-    persist, so the no-flood common case costs ZERO extra jobs over the
-    pre-cap plan. A sketch bound ≤ cap proves no hot block (one-sided —
-    it can only err toward the exact rung) and returns the plan
-    UNTOUCHED; past the bound, one exact aggregate on the block-key
-    grain (tiny — block cardinality = k clusters / labels) resolves the
-    real hot set. With an UNCACHED input the probe job recomputes the
-    relation once — the LSH explicit-cap caveat. More hot blocks than
-    the collect cap (pathological) fall back to an in-plan broadcast
-    join.
-    """
-    import logging
-
-    log = logging.getLogger(__name__)
-    if max_block is None:
-        return rel, list(key_cols)
-    if max_block == "auto":
-        max_block = DEFAULT_MAX_BLOCK
-        log.info(
-            "%s: auto block cap %d active — blocks larger than the cap are "
-            "split into hash sub-blocks (cross-sub pairs skipped); pass "
-            "max_block=<int> to tune or max_block=None to disable",
-            op_name, max_block,
-        )
-    max_block = int(max_block)
-    if max_block < 2:
-        raise ValueError("max_block must be >= 2 (a 1-member block emits no pairs)")
-    from pyspark.sql import Observation
-
-    from timeseriesfuser_spark.ops.dedup import (
-        _HOT_COLLECT_CAP,
-        _cms_max_key_bound,
-        _cms_probe_expr,
-    )
-
-    obs = Observation()
-    rel.observe(obs, _cms_probe_expr(rel, key_cols, size_hint)).count()
-    raw = obs.get["__cms"]
-    if raw is not None and _cms_max_key_bound(bytes(raw)) <= max_block:
-        return rel, list(key_cols)
-    counts = rel.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__bn"))
-    hot_rows = (
-        counts.filter(F.col("__bn") > max_block)
-        .limit(_HOT_COLLECT_CAP + 1)
-        .collect()
-    )
-    if not hot_rows:
-        return rel, list(key_cols)
-    sub_of = F.pmod(F.xxhash64(F.col(id_col)), F.ceil(F.col("__bn") / max_block))
-    if len(hot_rows) <= _HOT_COLLECT_CAP:
-        log.warning(
-            "%s: block cap %d split %d hot blocks (%d member rows, largest "
-            "%d) into hash sub-blocks — pairs across sub-blocks of those "
-            "blocks are skipped",
-            op_name, max_block, len(hot_rows),
-            sum(r["__bn"] for r in hot_rows),
-            max(r["__bn"] for r in hot_rows),
-        )
-        hot_local = rel.sparkSession.createDataFrame(
-            [tuple(r[k] for k in key_cols) + (r["__bn"],) for r in hot_rows],
-            rel.select(*key_cols).withColumn(
-                "__bn", F.lit(0).cast("long")
-            ).schema,
-        )
-        capped = rel.join(F.broadcast(hot_local), list(key_cols), "left")
-    else:
-        log.warning(
-            "%s: block cap %d found MORE than %d hot blocks — splitting "
-            "via an in-plan broadcast of the hot-count relation",
-            op_name, max_block, _HOT_COLLECT_CAP,
-        )
-        capped = rel.join(
-            F.broadcast(counts.filter(F.col("__bn") > max_block)),
-            list(key_cols),
-            "left",
-        )
-    capped = capped.withColumn(
-        "__sub",
-        F.when(F.col("__bn").isNull(), F.lit(0)).otherwise(sub_of).cast("long"),
-    ).drop("__bn")
-    return capped, list(key_cols) + ["__sub"]
 
 
 def assign_to_centroids(
@@ -1012,7 +898,6 @@ def semantic_dedup_pairs(
     scale: int = 1000,
     round_to: Optional[int] = 6,
     max_block="auto",
-    size_hint: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs: cluster-blocked
     pairwise cosine (Abbas et al. 2023's recipe — k-means partition, then
@@ -1029,14 +914,10 @@ def semantic_dedup_pairs(
     self-join); centroids broadcast. Skew = the largest cluster: when k
     is under-provisioned for N (the 23.9× sf1 ladder artifact, SCALE.md
     r10), ``max_block`` bounds it — hot clusters split into
-    ``ceil(n/cap)`` hash sub-blocks (:func:`_split_hot_blocks`; pairs
-    across sub-blocks of a HOT cluster are skipped, WARNING-logged),
-    capping per-task cost at cap²·dim no matter how wrong k is.
-
-    ``size_hint``: approximate corpus row count, the derived-relation
-    size channel for the hot-block probe's sketch width — see
-    :func:`ops.dedup.minhash_lsh_pairs` (fan-out 1: one block row per
-    vector).
+    ``ceil(n/cap)`` hash sub-blocks (``ops.dedup._window_cap``; pairs
+    across sub-blocks of a HOT cluster are skipped, counted as the
+    observed metric ``semantic_dedup_pairs.block_cap``), capping
+    per-task cost at cap²·dim no matter how wrong k is.
     """
     a = assign_to_centroids(
         df, centroids,
@@ -1047,13 +928,13 @@ def semantic_dedup_pairs(
     v = df.select(
         F.col(id_col).alias("id"), quantized(F.col(vec_col), scale).alias("__v")
     ).withColumn("__n", _sq_norm(F.col("__v")))
-    # the split probe's observed count() doubles as the materializer —
-    # only materialize here when the probe is disabled (max_block=None)
-    withv = _maybe_cache(a.join(v, "id"), True, materialize=max_block is None)
-    rel, jkeys = _split_hot_blocks(
-        withv, ["cluster_id"], "id", max_block, "semantic_dedup_pairs",
-        size_hint=size_hint,
+    from timeseriesfuser_spark.ops.dedup import _window_cap
+
+    rel = _window_cap(
+        _maybe_cache(a.join(v, "id"), True), ["cluster_id"], max_block,
+        "semantic_dedup_pairs", split_id="id", default=DEFAULT_MAX_BLOCK,
     )
+    jkeys = ["cluster_id", "__sub"]
 
     x, y = rel.alias("x"), rel.alias("y")
     dot = _dot(F.col("x.__v"), F.col("y.__v"))
@@ -1089,7 +970,6 @@ def blocked_cosine_pairs(
     round_to: Optional[int] = 6,
     max_block="auto",
     cache: bool = True,
-    size_hint: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs blocked on a caller-chosen
     key column (label / shard / language — any pre-existing partition of
@@ -1104,25 +984,23 @@ def blocked_cosine_pairs(
     Scale: pair space is Σ|block|², never corpus² — and ``max_block``
     (default-on, :data:`DEFAULT_MAX_BLOCK`) bounds the hottest block by
     splitting it into hash sub-blocks, so a degenerate blocking column
-    (one giant block) degrades to bounded work + a WARNING, not a
-    quadratic flood. One shuffle of the corpus (the block-key
-    self-join). ``size_hint``: approximate corpus row count, the
-    derived-relation size channel for the hot-block probe's sketch
-    width — see :func:`ops.dedup.minhash_lsh_pairs`.
+    (one giant block) degrades to bounded work counted as the observed
+    metric ``blocked_cosine_pairs.block_cap``, not a quadratic flood.
+    One shuffle of the corpus (the block-key self-join).
     """
     rel = df.select(
         F.col(id_col).alias("id"),
         F.col(block_col).alias("__b"),
         quantized(F.col(vec_col), scale).alias("__v"),
     ).withColumn("__n", _sq_norm(F.col("__v")))
-    rel = _maybe_cache(
-        rel.filter(F.col("__n") > 0), cache,
-        materialize=cache and max_block is None,
+    from timeseriesfuser_spark.ops.dedup import _window_cap
+
+    rel = _window_cap(
+        _maybe_cache(rel.filter(F.col("__n") > 0), cache), ["__b"],
+        max_block, "blocked_cosine_pairs", split_id="id",
+        default=DEFAULT_MAX_BLOCK,
     )
-    rel, jkeys = _split_hot_blocks(
-        rel, ["__b"], "id", max_block, "blocked_cosine_pairs",
-        size_hint=size_hint,
-    )
+    jkeys = ["__b", "__sub"]
     # Gram-kernel path (guide §4.2/§8): the block self-join evaluates the
     # dot as an interpreted zip_with/aggregate per CANDIDATE pair —
     # O(Σ|block|²·dim) boxed lambda evals. Grouping by the join key

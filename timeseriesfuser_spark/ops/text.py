@@ -1092,8 +1092,9 @@ def fuzzy_match_pairs(
 
     Scale: the block join is quadratic PER BLOCK like any blocked
     pair-generation — ``max_bucket`` (default "auto") applies the LSH
-    family's hot-bucket guard (``ops.dedup._cap_buckets``: dropped
-    buckets WARNING-logged when cached, lazy cap + INFO otherwise).
+    family's hot-bucket guard (``ops.dedup._window_cap``: dropped
+    buckets counted as the observed metric
+    ``fuzzy_match_pairs.bucket_cap``).
     Verification is one codegen ``levenshtein`` per candidate.
     """
     if max_edits != 1:
@@ -1101,7 +1102,7 @@ def fuzzy_match_pairs(
             "max_edits must be 1 (the 1-deletion neighborhood is exact "
             "only for distance <= 1)"
         )
-    from timeseriesfuser_spark.ops.dedup import _cap_buckets, _maybe_cache
+    from timeseriesfuser_spark.ops.dedup import _maybe_cache, _window_cap
 
     s = F.col(text_col)
     dels = F.transform(
@@ -1121,11 +1122,8 @@ def fuzzy_match_pairs(
             F.explode(variants).alias("__k"),
         ),
         cache,
-        materialize=not (cache and max_bucket is not None),
     )
-    blocks = _cap_buckets(
-        blocks, ["__k"], max_bucket, "fuzzy_match_pairs", eager_stats=cache
-    )
+    blocks = _window_cap(blocks, ["__k"], max_bucket, "fuzzy_match_pairs")
     a, b = blocks.alias("a"), blocks.alias("b")
     cand = (
         a.join(b, (F.col("a.__k") == F.col("b.__k"))

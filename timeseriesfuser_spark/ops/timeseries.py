@@ -1662,9 +1662,8 @@ def lateness_stats(
 
     CONSTRUCTION-TIME ACTION: when ``seq_col`` is numeric this op runs
     a driver ``approxQuantile`` job at call time (one extra input scan)
-    to pick the pass-1 bucket bounds — the same eager pattern as
-    ``_cap_buckets``. Callers composing it into lazy plans should call
-    it once and reuse the returned DataFrame.
+    to pick the pass-1 bucket bounds. Callers composing it into lazy
+    plans should call it once and reuse the returned DataFrame.
 
     With ``seq_col`` as the
     ingest/arrival order, a row's lateness is how far the already-seen

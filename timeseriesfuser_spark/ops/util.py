@@ -78,6 +78,24 @@ def track_persist(df: DataFrame) -> DataFrame:
     return df
 
 
+def observed_metrics(df: DataFrame) -> dict:
+    """Named ``observe`` metrics of ``df``'s own last action, as
+    ``{name: {metric: value}}`` — e.g. the hot-bucket caps'
+    ``"<op>.bucket_cap"`` drop counts. Read it after an action that runs
+    ``df``'s plan (``collect``, ``toPandas``, a write); ``count()`` runs
+    a new plan whose metrics land elsewhere. An observation in a branch
+    that AQE replaced by an empty relation is missing."""
+    it = df._jdf.queryExecution().observedMetrics().iterator()
+    out = {}
+    while it.hasNext():
+        kv = it.next()
+        row = kv._2()
+        out[kv._1()] = {
+            f: row.get(i) for i, f in enumerate(row.schema().fieldNames())
+        }
+    return out
+
+
 def iter_ckpt(df: DataFrame):
     """Eager **serialized** local checkpoint for iterative loops — the
     connected-components scale recipe (SCALE.md r23, 57M-edge cell),
@@ -176,10 +194,9 @@ def estimated_input_bytes(df: DataFrame):
     input is not file-backed (synthetic ranges, in-memory frames,
     post-shuffle intermediates) — each caller picks its OWN unknown-size
     policy: the vectorized-signature switch treats unknown as LARGE
-    (conservative for the vectorized path), while the rung-0 probe
-    width (``dedup._cms_probe_expr``) treats unknown as SMALL (the
-    measured-cheaper default; large derived inputs assert size via
-    ``size_hint``)."""
+    (conservative for the vectorized path), while the cache footprint
+    guard (``dedup._maybe_cache``) measures the relation instead (or
+    takes a caller ``size_hint``)."""
     import os
 
     try:
