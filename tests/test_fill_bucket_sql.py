@@ -1,19 +1,11 @@
-"""r15 optimization pins: the binary-search CASE-tree bucket id and the
-SQL-literal LUT rendering in operators.fill must be bit-equivalent to the
-formulations they replaced (HOF aggregate / per-element F.lit)."""
-
-import math
+"""r15 optimization pins: the binary-search CASE-tree bucket id in
+operators.fill must be bit-equivalent to the higher-order-function
+aggregate it replaced, and forward_fill keeps its LOCF semantics."""
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from timeseriesfuser_spark.operators.fill import (
-    _bucket_sql,
-    _lit_of,
-    _sql_lit,
-    forward_fill,
-)
+from timeseriesfuser_spark.operators.fill import _bucket_sql, forward_fill
 
 
 def _old_bucket_col(first_order_col, bounds):
@@ -51,40 +43,6 @@ def test_bucket_tree_single_bound(spark):
     df = spark.createDataFrame([(0.5,), (1.5,), (None,)], "x double")
     rows = df.select(F.expr(_bucket_sql("x", [1.0])).alias("b")).collect()
     assert [r["b"] for r in rows] == [0, 1, 0]
-
-
-def test_sql_lit_roundtrip(spark):
-    cases = [
-        (None, T.DoubleType()),
-        (1.0 / 3.0, T.DoubleType()),
-        (-0.0, T.DoubleType()),
-        (float("nan"), T.DoubleType()),
-        (float("inf"), T.DoubleType()),
-        (12345678901234567, T.LongType()),
-        (True, T.BooleanType()),
-        ("plain ascii", T.StringType()),
-        ({"value": 2.5}, T.StructType([T.StructField("value", T.DoubleType())])),
-        ([1, 2, 3], T.ArrayType(T.LongType())),
-    ]
-    exprs, refs = [], []
-    for i, (v, dt) in enumerate(cases):
-        s = _sql_lit(v, dt)
-        assert s is not None, (v, dt)
-        exprs.append(F.expr(s).alias(f"n{i}"))
-        refs.append(_lit_of(v, dt).alias(f"o{i}"))
-    row = spark.range(1).select(*exprs, *refs).first()
-    for i, (v, dt) in enumerate(cases):
-        a, b = row[f"n{i}"], row[f"o{i}"]
-        if isinstance(a, float) and math.isnan(a):
-            assert math.isnan(b)
-        else:
-            assert a == b, (i, a, b)
-
-
-def test_sql_lit_refuses_unsafe():
-    assert _sql_lit("has ' quote", T.StringType()) is None
-    assert _sql_lit("tab\there", T.StringType()) is None
-    assert _sql_lit(1, T.DecimalType(10, 2)) is None
 
 
 def test_forward_fill_unchanged_semantics(spark):

@@ -406,15 +406,38 @@ class TestLinkPredict:
         assert r["jaccard_ppm"] == 2 * 1_000_000 // 2  # |∩|=2, |∪|=2
         assert (1, 4) not in out  # already adjacent
         # hub cap: star center 100 connected to 0..9 — every leaf pair
-        # meets only through the hub; capping degree 5 drops them all
+        # meets only through the hub; capping degree 5 drops them all,
+        # and the drop (1 hub, its 10 adjacency rows) is reported with
+        # AQE on and off. With 1-50 and 2-50 added, (1, 2) counts only
+        # middle 50 and the hub's own links still score via middles 1, 2.
         star = spark.createDataFrame(
             [(100, i) for i in range(10)], "src long, dst long"
         )
-        with caplog.at_level(logging.WARNING,
-                             logger="timeseriesfuser_spark.ops.graph"):
-            n = link_predict_cn(star, max_degree=5).count()
-        assert n == 0
-        assert any("hub middles" in rec.message for rec in caplog.records)
+        more = star.unionByName(
+            spark.createDataFrame([(1, 50), (2, 50)], "src long, dst long")
+        )
+        prev = spark.conf.get("spark.sql.adaptive.enabled")
+        for aqe in ("true", "false"):
+            caplog.clear()
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            try:
+                with caplog.at_level(logging.WARNING,
+                                     logger="timeseriesfuser_spark.ops.graph"):
+                    n = link_predict_cn(star, max_degree=5).count()
+                got = {(r["node_a"], r["node_b"]): r["common"]
+                       for r in link_predict_cn(more, max_degree=5).collect()}
+            finally:
+                spark.conf.set("spark.sql.adaptive.enabled", prev)
+            assert n == 0, aqe
+            assert got == {(1, 2): 1, (50, 100): 2}, aqe
+            hub_logs = [rec.getMessage() for rec in caplog.records
+                        if "hub middles" in rec.getMessage()]
+            assert len(hub_logs) == 2 and all(
+                "1 hub middles above degree cap 5 (10 adjacency rows)" in m
+                for m in hub_logs
+            ), (aqe, hub_logs)
+        with pytest.raises(ValueError, match="max_degree"):
+            link_predict_cn(star, max_degree=1)
 
     def test_dedup_and_self_loops(self, spark):
         from timeseriesfuser_spark.ops.graph import link_predict_cn

@@ -250,7 +250,7 @@ def resample_last_interval(
         )
     return _gap_fill_tail(
         joined, ts_col, keys, value_cols, ffill_keys,
-        ffill_bucket=ffill_bucket, cache=cache,
+        ffill_bucket=ffill_bucket, ffill_buckets=n, cache=cache,
     )
 
 
@@ -261,19 +261,20 @@ def _gap_fill_tail(
     value_cols: Sequence[str],
     ffill_keys: Sequence[str],
     ffill_bucket: Optional[F.Column] = None,
+    ffill_buckets: Optional[int] = None,
     cache: bool = True,
 ) -> DataFrame:
     """Shared gap-fill projection: blank boundaries carry only the
     ``ffill_keys`` of the previous event (even a null value is carried —
     the carry struct marks event presence, not non-nullness).
 
-    ``ffill_bucket`` (an in-plan bucket-id Column over ``joined``) is
-    ONLY valid when ``joined`` is a fully gap-filled UNIFORM spine (one
-    row per grid step): equal-width cuts are exact equal-depth range
-    buckets there. For any non-uniform ``joined`` (e.g. gap_fill=False
-    output, or raw event rows) pass ``None`` so ``forward_fill`` runs its
-    quantile pass — equal-width cuts over a skewed distribution silently
-    degrade to unbalanced partitions."""
+    ``ffill_bucket`` (an in-plan bucket-id Column over ``joined``, ids
+    below ``ffill_buckets``) is ONLY valid when ``joined`` is a fully
+    gap-filled UNIFORM spine (one row per grid step): equal-width cuts
+    are exact equal-depth range buckets there. For any non-uniform
+    ``joined`` (e.g. gap_fill=False output, or raw event rows) pass
+    ``None`` so ``forward_fill`` runs its quantile pass — equal-width cuts
+    over a skewed distribution silently degrade to unbalanced partitions."""
     out_cols: List[F.Column] = [F.col(_BUCKET).alias(ts_col)] + [
         F.col(k) for k in keys
     ]
@@ -303,7 +304,8 @@ def _gap_fill_tail(
             if cache:
                 joined = track_persist(joined.persist(StorageLevel.MEMORY_AND_DISK))
             joined = forward_fill(
-                joined, [_BUCKET], [_CARRY], bucket_col=ffill_bucket
+                joined, [_BUCKET], [_CARRY], num_partitions=ffill_buckets,
+                bucket_col=ffill_bucket,
             )
         for c in value_cols:
             if c in ffill_keys:

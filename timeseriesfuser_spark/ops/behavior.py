@@ -1166,6 +1166,8 @@ def rfm_segments(
 
     Scale: one hash-agg to the per-user grain, then three bucketed
     global rankings over that grain (#users rows, not events)."""
+    from pyspark import StorageLevel
+
     from timeseriesfuser_spark.ops.scale import quantile_bins
 
     from timeseriesfuser_spark.timeutils import ts_epoch_ms_col
@@ -1199,6 +1201,10 @@ def rfm_segments(
         "n_orders",
         "monetary_cents",
     )
+
+    # rel (an aggregate over the orders) feeds the output join and each
+    # ranking's sketch, scan and seeds branches: build it once.
+    rel = track_persist(rel.persist(StorageLevel.MEMORY_AND_DISK))
 
     def _bin(col: str, name: str) -> DataFrame:
         return quantile_bins(

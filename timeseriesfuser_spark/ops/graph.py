@@ -582,11 +582,16 @@ def link_predict_cn(
     Scale: candidate pairs come from the WEDGE join (adjacency
     self-joined on the shared middle node), so the fan-out is
     Σ_n deg(n)² — bounded by real co-occurrence, never |V|². That sum
-    is dominated by hub middles; ``max_degree`` drops nodes above the
-    cap from the MIDDLE position only (their own links still score via
-    their other endpoints) with a WARNING-logged count — the LSH
-    hot-bucket posture. ``top_n`` bounds output per node_a via
-    WindowGroupLimit (rank by common desc, then node_b).
+    is dominated by hub middles; ``max_degree`` (>= 2, else ValueError)
+    drops nodes above the cap from the MIDDLE position only (their own
+    links still score via their other endpoints) with a WARNING-logged
+    count of the hubs and their adjacency rows — the LSH hot-bucket
+    posture, but counted by one eager aggregate at construction: the
+    in-plan cap's observed counts (``ops.dedup._window_cap``) are lost
+    when the cap empties the result under AQE and are overwritten across
+    this self-join's two observed sides.
+    ``top_n`` bounds output per node_a via WindowGroupLimit (rank by
+    common desc, then node_b).
     """
     if min_common < 1:
         raise ValueError("min_common must be >= 1")
@@ -601,20 +606,22 @@ def link_predict_cn(
 
     mid = adj.select(F.col("a").alias("n"), F.col("b").alias("v"))
     if max_degree is not None:
+        if max_degree < 2:
+            raise ValueError("max_degree must be >= 2 (a degree-1 middle emits no pairs)")
         import logging
 
         hubs = deg.filter(F.col("deg") > max_degree).select(
-            F.col("a").alias("n")
+            F.col("a").alias("n"), "deg"
         )
-        n_hubs = hubs.count()
+        n_hubs, n_rows = hubs.agg(F.count(F.lit(1)), F.sum("deg")).first()
         if n_hubs:
             logging.getLogger(__name__).warning(
                 "link_predict_cn: %d hub middles above degree cap %d "
-                "dropped from wedge generation — pairs meeting only "
-                "through them are skipped",
-                n_hubs, max_degree,
+                "(%d adjacency rows) dropped from wedge generation — pairs "
+                "meeting only through them are skipped",
+                n_hubs, max_degree, n_rows,
             )
-        mid = mid.join(F.broadcast(hubs), "n", "left_anti")
+        mid = mid.join(F.broadcast(hubs.select("n")), "n", "left_anti")
 
     w1 = mid.select("n", F.col("v").alias("x"))
     w2 = mid.select("n", F.col("v").alias("y"))

@@ -9,15 +9,12 @@ corpus order — which Spark's window functions only express as
 ``sum() OVER (ORDER BY ...)`` with no partitioning: a single-task stage that
 cannot scale.
 
-``token_offsets`` instead runs the two-pass range-bucketed prefix sum
-(same scheme as ``operators.fill``, SURVEY.md §4.3.1):
-
-  1. bucket rows by data-derived quantile ranges of the order column;
-     within-bucket running sums via a window *partitioned* on the bucket id
-     (parallel, bounded tasks);
-  2. per-bucket totals (one tiny row per bucket) are collected and turned
-     into a literal prefix-offset lookup — O(#buckets) driver work, never
-     data-proportional.
+``token_offsets`` instead runs the shared two-pass range-bucketed prefix
+scan (``operators.fill._bucketed_scan``, SURVEY.md §4.3.1): within-bucket
+running sums via a window *partitioned* on a range-bucket id of the order
+column (parallel, bounded tasks), plus each bucket's carry-in — the sum of
+the per-bucket totals before it — computed in the plan from one tiny row
+per bucket and broadcast back. Never data-proportional, no driver lookup.
 
 ``sequence_pack`` derives the chunk assignment from the offsets with pure
 integer arithmetic: everything is oracle-reproducible from a plain SQL
@@ -28,14 +25,12 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from timeseriesfuser_spark.operators.fill import _bucket_col
+from timeseriesfuser_spark.operators.fill import _bucketed_scan
 from timeseriesfuser_spark.ops.text import tokens_col
-
-_PB = "__pk_bucket"
 
 
 def token_offsets(
@@ -52,12 +47,11 @@ def token_offsets(
     ``text_col``. Adds ``n_tokens``, ``start_offset`` (tokens strictly
     before this doc), ``end_offset`` (= start + n).
 
-    No global-order window: prefix sums are composed from within-bucket
-    window sums plus a literal per-bucket carry (see module docstring), so
-    every task's work is bounded by its bucket — safe at 100 TB.
+    No global-order window: the prefix sum is the shared range-bucketed
+    scan (see module docstring), so every task's work is bounded by its
+    bucket — safe at 100 TB. The only construction-time job is its
+    quantile sketch on ``order_col`` (none when ``num_buckets=1``).
     """
-    spark = df.sparkSession
-    n = num_buckets or int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     # COALESCE to 0: a NULL-text doc occupies zero tokens but still has a
     # concrete position in the concat order — without this the NULL
     # poisons start_offset = end - n for the doc (its SQL-window twin
@@ -69,45 +63,18 @@ def token_offsets(
             F.size(tokens_col(F.col(text_col))), F.lit(0)
         ).cast("long")
     )
-    base = df.withColumn("n_tokens", nt)
-    if n > 1:
-        qs = [i / n for i in range(1, n)]
-        bounds = sorted(
-            set(base.stat.approxQuantile(order_col, qs, 1.0 / (4 * n)))
-        )
-    else:
-        bounds = []
-    part = base.withColumn(
-        _PB, _bucket_col(order_col, bounds) if bounds else F.lit(0)
-    )
-    # part feeds the totals collect AND the final output plan, so the
-    # word tokenizer runs twice over the corpus. Deliberately NOT
-    # materialized: part carries the full text column, and checkpointing
-    # corpus-sized text to executor storage measured slower than the
-    # second tokenizer pass (tokenizing is a cheap codegen projection).
-    # Pass 2 first: per-bucket totals → prefix offsets (#buckets rows).
-    totals = {
-        r[_PB]: r["t"]
-        for r in part.groupBy(_PB).agg(F.sum("n_tokens").alias("t")).collect()
-    }
-    n_buckets = len(bounds) + 1
-    off, running = [], 0
-    for b in range(n_buckets):
-        off.append(running)
-        running += totals.get(b, 0) or 0
-    lut = F.array(*[F.lit(int(v)).cast("long") for v in off])
-    # Pass 1: within-bucket inclusive running sum (parallel across buckets).
-    w = (
-        Window.partitionBy(_PB)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = part.withColumn(
-        "end_offset", F.sum("n_tokens").over(w) + F.element_at(lut, F.col(_PB) + 1)
+    # The scan reads its input twice (window branch + seeds branch), so
+    # the word tokenizer runs twice over the corpus. Deliberately NOT
+    # materialized: the input carries the full text column, and caching
+    # corpus-sized text measured slower than the second tokenizer pass
+    # (tokenizing is a cheap codegen projection).
+    out = _bucketed_scan(
+        df.withColumn("n_tokens", nt), [order_col],
+        [("end_offset", "n_tokens", "sum")], num_buckets=num_buckets,
     )
     return out.withColumn(
         "start_offset", F.col("end_offset") - F.col("n_tokens")
-    ).drop(_PB)
+    )
 
 
 def sequence_pack(

@@ -322,6 +322,22 @@ def compact_small_files(
     }
 
 
+def _persist_if_nondeterministic(df: DataFrame) -> DataFrame:
+    """The range-bucketed scan reads its input in two plan branches (the
+    within-bucket window and the per-bucket seeds), and each branch must
+    see the SAME rows or the carry silently corrupts the result. A
+    deterministic plan re-evaluates identically; a nondeterministic one
+    (``rand()``, ``monotonically_increasing_id``...) is persisted, lazily,
+    so both branches read one cache built inside the caller's action."""
+    if df._jdf.queryExecution().analyzed().deterministic():
+        return df
+    from pyspark import StorageLevel
+
+    from timeseriesfuser_spark.ops.util import track_persist
+
+    return track_persist(df.persist(StorageLevel.MEMORY_AND_DISK))
+
+
 def exact_global_rank(
     df: DataFrame,
     order_cols: Sequence[str],
@@ -333,67 +349,37 @@ def exact_global_rank(
     global-order window (``row_number() OVER (ORDER BY …)`` plans a
     single-task stage — unusable at scale).
 
-    Two-pass range-bucketed scheme (operators.fill / ops.packing): rows
-    bucket by data-derived quantile ranges of the FIRST order column
-    (ties stay in one bucket); within-bucket ``row_number`` over the full
-    tuple runs parallel per bucket, and a #buckets-row offset lookup —
-    collected, never data-proportional — lifts it to the global rank.
-    ``order_cols`` must be a total order (include a unique tiebreaker).
+    The rank is an inclusive count over the shared range-bucketed scan
+    (``operators.fill._bucketed_scan``): rows bucket by data-derived
+    quantile ranges of the FIRST order column (ties stay in one bucket);
+    within-bucket counts over the full tuple run parallel per bucket, and
+    each bucket's carry-in (the row count of the buckets before it) is
+    computed in the plan and broadcast back. ``order_cols`` must be a
+    total order (include a unique tiebreaker). The only construction-time
+    job is the quantile sketch; a nondeterministic input is persisted so
+    both scan branches see the same rows.
 
     NULL ordering is NULLS FIRST (Spark's ascending default; the range
     bucketer sends NULLs to bucket 0, consistent with it) — SQL twins
     must say ``ORDER BY col ASC NULLS FIRST`` explicitly, because
     DuckDB/Postgres default ascending NULLS LAST.
     """
-    ranked, _total = _global_rank_with_total(
-        df, order_cols, num_buckets=num_buckets, rank_col=rank_col
-    )
-    return ranked
+    return _global_rank(df, order_cols, num_buckets, rank_col)
 
 
-def _global_rank_with_total(df, order_cols, *, num_buckets, rank_col):
-    """Shared core of exact_global_rank: also returns the exact row count
-    (= the sum of the per-bucket totals it must collect anyway), so
-    callers never re-execute the ranked plan just to count it."""
-    from pyspark.sql.window import Window
-
-    from timeseriesfuser_spark.operators.fill import _bucket_col
+def _global_rank(df, order_cols, num_buckets, rank_col, total=None):
+    """Shared core of exact_global_rank; ``total`` names an extra column
+    holding the exact row count, computed in the same plan."""
+    from timeseriesfuser_spark.operators.fill import _bucketed_scan
 
     order_cols = list(order_cols)
     if not order_cols:
         raise ValueError("order_cols must be non-empty")
-    spark = df.sparkSession
-    n = num_buckets or int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    if n > 1:
-        qs = [i / n for i in range(1, n)]
-        bounds = sorted(
-            set(df.stat.approxQuantile(order_cols[0], qs, 1.0 / (4 * n)))
-        )
-    else:
-        bounds = []
-    b = "__rk_bucket"
-    part = df.withColumn(
-        b, _bucket_col(order_cols[0], bounds) if bounds else F.lit(0)
+    return _bucketed_scan(
+        _persist_if_nondeterministic(df), order_cols,
+        [(rank_col, F.lit(1).cast("long"), "sum")],
+        num_buckets=num_buckets, total=total,
     )
-    # Materialize once: the totals collect and the final ranked plan must
-    # see the SAME rows — a nondeterministic or concurrently-growing
-    # input re-evaluated per pass would silently corrupt the offsets.
-    part = part.localCheckpoint(eager=True)
-    totals = {
-        r[b]: r["c"]
-        for r in part.groupBy(b).agg(F.count(F.lit(1)).alias("c")).collect()
-    }
-    off, running = [], 0
-    for i in range(len(bounds) + 1):
-        off.append(running)
-        running += totals.get(i, 0) or 0
-    lut = F.array(*[F.lit(int(v)).cast("long") for v in off])
-    w = Window.partitionBy(b).orderBy(*[F.col(c) for c in order_cols])
-    ranked = part.withColumn(
-        rank_col,
-        (F.row_number().over(w) + F.element_at(lut, F.col(b) + 1)).cast("long"),
-    ).drop(b)
-    return ranked, running
 
 
 def quantile_bins(
@@ -411,14 +397,12 @@ def quantile_bins(
     :func:`exact_global_rank`, so no single-task stage exists anywhere."""
     if k <= 0:
         raise ValueError("k must be positive")
-    ranked, total = _global_rank_with_total(
-        df, [col, *tiebreak_cols], num_buckets=num_buckets,
-        rank_col="global_rank",
+    ranked = _global_rank(
+        df, [col, *tiebreak_cols], num_buckets, "global_rank", total="__qb_n"
     )
     return ranked.withColumn(
-        "bin",
-        F.expr(f"(global_rank - 1) * {int(k)} DIV {int(total)}").cast("long"),
-    )
+        "bin", F.expr(f"(global_rank - 1) * {int(k)} DIV __qb_n").cast("long")
+    ).drop("__qb_n")
 
 
 def pareto_frontier_2d(
@@ -437,72 +421,33 @@ def pareto_frontier_2d(
     (dominance is undefined on NULL).
 
     Scale design: the naive skyline is the O(n²) NOT-EXISTS self-join
-    (the oracle's canonical statement). Here it is a prefix-min: sorted
-    by x, a row is dominated iff min(y) over strictly-smaller x is ≤ y,
-    or some same-x row has smaller y. The global prefix-min uses the
-    two-pass range-bucketed idiom (:func:`exact_global_rank` /
-    operators.fill): quantile-range buckets on x (ties never straddle a
-    bucket), a per-bucket window on the distinct-x GRAIN, and a
-    #buckets-sized driver lookup of cross-bucket prefix minima — no
-    single-task global window anywhere. Supports integral/float
-    dimensions (the driver lookup re-emits collected minima as
-    literals).
+    (the oracle's canonical statement). Here it is one prefix minimum:
+    with rows sorted by (x, y), a row is dominated iff the smallest
+    (y, x) pair among the rows before it is lexicographically smaller
+    than its own — a smaller y at an x no larger, or an equal y at a
+    strictly smaller x (an equal pair is a duplicate, which dominates
+    nothing, whatever order the duplicates take). The prefix minimum is a
+    strictly-before scan on the shared range-bucketed scan
+    (``operators.fill._bucketed_scan``) — no single-task global window,
+    and the cross-bucket minima are carried in the plan with their
+    native types. A nondeterministic input is persisted so both scan
+    branches see the same rows.
     """
-    from pyspark.sql.window import Window
-
-    from timeseriesfuser_spark.operators.fill import _bucket_col
+    from timeseriesfuser_spark.operators.fill import _bucketed_scan
 
     mx, my_flip = (list(maximize) + [False, False])[:2]
     rows = df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
     sx = (-F.col(x_col)).alias("__sx") if mx else F.col(x_col).alias("__sx")
     sy = (-F.col(y_col)).alias("__sy") if my_flip else F.col(y_col).alias("__sy")
-    rows = rows.select("*", sx, sy)
-
-    spark = df.sparkSession
-    n = num_buckets or int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    if n > 1:
-        qs = [i / n for i in range(1, n)]
-        bounds = sorted(set(rows.stat.approxQuantile("__sx", qs, 1.0 / (4 * n))))
-    else:
-        bounds = []
-    b = "__sk_bucket"
-    part = rows.withColumn(
-        b, _bucket_col("__sx", bounds) if bounds else F.lit(0)
+    rows = _persist_if_nondeterministic(rows.select("*", sx, sy))
+    pair = F.struct("__sy", "__sx")
+    out = _bucketed_scan(
+        rows, ["__sx", "__sy"], [("__m", pair, "min")], inclusive=False,
+        num_buckets=num_buckets,
     )
-    # Materialize once: the bucket-min collect and the final plan must
-    # see the same rows (the exact_global_rank discipline).
-    part = part.localCheckpoint(eager=True)
-
-    ytype = part.schema["__sy"].dataType
-    bucket_mins = {
-        r[b]: r["m"]
-        for r in part.groupBy(b).agg(F.min("__sy").alias("m")).collect()
-    }
-    prefix, run = [], None
-    for i in range(len(bounds) + 1):
-        prefix.append(run)
-        m = bucket_mins.get(i)
-        if m is not None:
-            run = m if run is None or m < run else run
-    lut = F.array(*[F.lit(v).cast(ytype) for v in prefix])
-
-    gx = part.groupBy(b, "__sx").agg(F.min("__sy").alias("__my"))
-    w = (
-        Window.partitionBy(b)
-        .orderBy("__sx")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    return out.filter(F.col("__m").isNull() | (F.col("__m") >= pair)).drop(
+        "__sx", "__sy", "__m"
     )
-    gx = gx.select(
-        b, "__sx", "__my",
-        F.least(
-            F.min("__my").over(w), F.element_at(lut, F.col(b) + 1)
-        ).alias("__mlt"),
-    )
-    out = part.join(gx, [b, "__sx"])
-    dominated = (
-        F.col("__mlt").isNotNull() & (F.col("__mlt") <= F.col("__sy"))
-    ) | (F.col("__my") < F.col("__sy"))
-    return out.filter(~dominated).drop(b, "__sx", "__sy", "__my", "__mlt")
 
 
 def benford_digits(

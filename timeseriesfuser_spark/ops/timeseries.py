@@ -1661,9 +1661,10 @@ def lateness_stats(
     Structured Streaming watermark delay.
 
     CONSTRUCTION-TIME ACTION: when ``seq_col`` is numeric this op runs
-    a driver ``approxQuantile`` job at call time (one extra input scan)
-    to pick the pass-1 bucket bounds. Callers composing it into lazy
-    plans should call it once and reuse the returned DataFrame.
+    the shared scan's one ``approxQuantile`` job at call time (one extra
+    input scan) to pick the bucket bounds — none with ``num_buckets=1``.
+    Callers composing it into lazy plans should call it once and reuse
+    the returned DataFrame.
 
     With ``seq_col`` as the
     ingest/arrival order, a row's lateness is how far the already-seen
@@ -1677,25 +1678,27 @@ def lateness_stats(
     all exact integers. Rows with NULL ts/seq carry no arrival position
     and are excluded.
 
-    Scale: the running high-water mark is computed with the two-pass
-    range-bucketed scheme from ``operators.fill`` — NOT a per-group
-    serial window, which would pull each group's entire history through
-    one task. Pass 1 buckets rows by ``seq_col`` range (driver quantile
-    sketch on the numeric seq, ``num_buckets`` defaults to
-    ``spark.sql.shuffle.partitions``) and computes the strictly-before
-    running max within each (group, bucket); pass 2 is a tiny
-    per-(group, bucket) max aggregate whose per-group prefix maxima
-    (buckets strictly before mine) come from a window over that
-    #groups×#buckets relation and broadcast-join back. The final
-    high-water mark is ``greatest(local, carry)`` — exact, identical to
-    the serial formulation. A non-numeric ``seq_col`` (cast-to-double →
-    NULL) degrades to one bucket per group, i.e. the serial window.
-    The input is scanned three times (quantile sketch, pass-1 window,
-    pass-2 seeds) and deliberately not persisted — for a parquet scan a
-    re-read beats caching the full relation (the ``operators.fill``
-    measurement); persist upstream if the input is an expensive subplan.
+    Scale: the running high-water mark is the shared range-bucketed
+    scan (``operators.fill._bucketed_scan``, a strictly-before running
+    max per group) — NOT a per-group serial window, which would pull each
+    group's entire history through one task. Rows bucket by ``seq_col``
+    range (quantile sketch on the numeric seq, ``num_buckets`` defaults
+    to ``spark.sql.shuffle.partitions``); the running max runs within
+    each (group, bucket), and each (group, bucket)'s carry-in — the max
+    over the group's earlier buckets — is a window over one row per
+    occupied (group, bucket), partitioned by group and broadcast back;
+    the high-water mark is their ``greatest`` — exact, identical to the
+    serial formulation. That carry holds up to #groups × #buckets rows:
+    with a high-cardinality ``group_col`` pass a small ``num_buckets``
+    (many groups already spread the rows over many tasks). A
+    non-numeric ``seq_col`` degrades to one bucket per group, i.e. the
+    serial window. The input is scanned three times (quantile sketch,
+    window branch, seeds branch) and deliberately not persisted — for a
+    parquet scan a re-read beats caching the full relation (the
+    ``operators.fill`` measurement); persist upstream if the input is an
+    expensive subplan.
     """
-    from timeseriesfuser_spark.operators.fill import _bucket_col
+    from timeseriesfuser_spark.operators.fill import _bucketed_scan
 
     base = df.filter(
         F.col(ts_col).isNotNull() & F.col(seq_col).isNotNull()
@@ -1704,55 +1707,16 @@ def lateness_stats(
         F.col(ts_col).cast("long").alias("__ts"),
         F.col(seq_col).alias("__seq"),
     )
-    n = num_buckets or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+    scanned = _bucketed_scan(
+        base, ["__seq"], [("__hwm", "__ts", "max")], partition_by=["g"],
+        inclusive=False, num_buckets=num_buckets,
     )
-    numeric_seq = isinstance(
-        base.schema["__seq"].dataType,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-         T.FloatType, T.DoubleType, T.DecimalType),
-    )
-    if n > 1 and numeric_seq:
-        qs = [i / n for i in range(1, n)]
-        bounds = sorted(
-            set(base.stat.approxQuantile("__seq", qs, 1.0 / (4 * n)))
-        )
-    else:
-        bounds = []
-    part = base.withColumn(
-        "__pid", _bucket_col("__seq", bounds) if bounds else F.lit(0)
-    )
-
-    # Pass 1: strictly-before running max WITHIN each (group, bucket) —
-    # task size bounded by the bucket, parallel across groups × buckets.
-    w = (
-        Window.partitionBy("g", "__pid")
-        .orderBy("__seq")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = part.withColumn("__hwm_local", F.max("__ts").over(w))
-
-    # Pass 2: per-(group, bucket) max ts; prefix max over buckets
-    # strictly before mine — a window over the tiny seeds relation
-    # (#groups × #buckets rows), broadcast back.
-    seeds = part.groupBy("g", "__pid").agg(F.max("__ts").alias("__m"))
-    wc = (
-        Window.partitionBy("g")
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = seeds.select(
-        "g", "__pid", F.max("__m").over(wc).alias("__hwm_carry")
-    )
-
-    joined = local.join(F.broadcast(carry), ["g", "__pid"])
-    # greatest() skips NULLs (returns NULL only when all args are NULL:
-    # the very first arrivals, whose lateness is 0 by definition).
-    hwm = F.greatest(F.col("__hwm_local"), F.col("__hwm_carry"))
-    per_row = joined.select(
+    # greatest() skips NULLs: the high-water mark is NULL only for a
+    # group's very first arrival, whose lateness is 0 by definition.
+    per_row = scanned.select(
         "g",
         F.coalesce(
-            F.greatest(hwm - F.col("__ts"), F.lit(0)), F.lit(0)
+            F.greatest(F.col("__hwm") - F.col("__ts"), F.lit(0)), F.lit(0)
         ).cast("long").alias("__late"),
     )
     return per_row.groupBy("g").agg(
