@@ -18,6 +18,20 @@ Column-collision semantics (core.py:297-318): a column present in more than
 one source is renamed ``f"{col}{sep}{source_name}"`` (default sep ``'||'``);
 ``__timestamp``, ``merge_cols`` and the ``secondary_sort_col`` are exempt
 and share one column. ``rename_identical=False`` disables renaming.
+
+Window and frames are resolved once per fuser: the per-source first/last
+row probes (reference core.py:145-213) and the source reads run on first
+use and are shared by ``rename_maps``/``remap_keys`` and ``fused``.
+
+Forward fill of a small file-backed stream runs as ONE plain window.
+When every kept source is read from files and the files' on-disk size
+(``ops.util.estimated_input_bytes``) is below ``ops.util.SMALL_INPUT_BYTES``,
+the fill uses one bucket: no quantile sketch at construction and no
+seeds/carry stages in the query, which at this size cost more than the
+parallelism they buy. The rule lives here rather than in the shared
+scan because the pre-fill plan is raw file scans, a union and a filter,
+so on-disk bytes bound its rows; a generic scan input may be an explode
+or a join, whose size the files do not bound.
 """
 
 from __future__ import annotations
@@ -31,6 +45,7 @@ from pyspark.sql import functions as F
 
 from timeseriesfuser_spark.config import FuserConfig, SourceConfig
 from timeseriesfuser_spark.operators.fill import forward_fill
+from timeseriesfuser_spark.ops import util as ops_util
 from timeseriesfuser_spark.sources.readers import (
     INTERNAL_COLS,
     SEQ_COL,
@@ -69,6 +84,12 @@ class TimeSeriesFuser:
     loop. ``fused(spark)`` returns the merged DataFrame plan; sinks/replay
     live in :mod:`timeseriesfuser_spark.sinks` and
     :mod:`timeseriesfuser_spark.streaming`.
+
+    The processing window, each source's file list and the source frames
+    are resolved once, on first use (``rename_maps``, ``remap_keys`` or
+    ``fused``), and reused by every later call on the same SparkSession:
+    each source is probed once per fuser. To pick up files added since,
+    build a new fuser.
     """
 
     def __init__(self, sources: Sequence[SourceConfig], config: Optional[FuserConfig] = None,
@@ -85,7 +106,7 @@ class TimeSeriesFuser:
                 raise TypeError(f"Unknown fuser option {k!r}")
             setattr(cfg, k, v)
         self.config = cfg
-        self._rename_maps: Optional[Dict[str, Dict[str, str]]] = None
+        self._resolved = None
 
     # ------------------------------------------------------------------ #
 
@@ -105,17 +126,21 @@ class TimeSeriesFuser:
             sep=self.config.separator,
         )
 
-    def rename_maps(self, spark: SparkSession) -> Dict[str, Dict[str, str]]:
-        if self._rename_maps is None:
-            # Same source set as fused(): the reference drops out-of-window
-            # sources BEFORE computing collision renames (core.py:204-213
-            # precedes _pre_setup), so a collision that exists only with a
-            # window-dropped source must not rename anything — otherwise
-            # remap_keys would name columns the fused schema doesn't have.
-            sources, _, _ = self._resolve_window(spark)
+    def _resolve(self, spark: SparkSession):
+        """(frames, start, end, rename maps), built once per session.
+
+        Same source set for renames and the fused stream: the reference
+        drops out-of-window sources BEFORE computing collision renames
+        (core.py:204-213 precedes _pre_setup), so a collision that exists
+        only with a window-dropped source renames nothing."""
+        if self._resolved is None or self._resolved[0] is not spark:
+            sources, start, end = self._resolve_window(spark)
             frames = [(s, build_source_df(spark, s, i)) for i, s in enumerate(sources)]
-            self._rename_maps = self._compute_renames(frames)
-        return self._rename_maps
+            self._resolved = (spark, frames, start, end, self._compute_renames(frames))
+        return self._resolved[1:]
+
+    def rename_maps(self, spark: SparkSession) -> Dict[str, Dict[str, str]]:
+        return self._resolve(spark)[3]
 
     def remap_keys(self, spark: SparkSession, keys: Sequence[str]) -> List[str]:
         """Rewrite user column names to their post-collision-rename forms —
@@ -196,15 +221,18 @@ class TimeSeriesFuser:
         and aggregation don't need a pre-sort, and skipping it avoids a
         full-data exchange. ``sort=True`` adds the deterministic global
         order (ts, secondary, src, seq) for replay/golden output.
+
+        With ``forward_fill``, a stream whose sources are all file-backed
+        and whose files total under ``ops.util.SMALL_INPUT_BYTES`` on disk
+        is filled in one window (no sketch job, no carry stages); any
+        other stream uses the range-bucketed scan's default buckets.
         """
         cfg = self.config
-        sources, start, end = self._resolve_window(spark)
-        frames = [(s, build_source_df(spark, s, i)) for i, s in enumerate(sources)]
-        self._rename_maps = self._compute_renames(frames)
+        frames, start, end, maps = self._resolve(spark)
 
         renamed = []
         for src, df in frames:
-            m = self._rename_maps[src.name]
+            m = maps[src.name]
             if m:
                 df = df.withColumnsRenamed(m)
             renamed.append(df)
@@ -256,7 +284,16 @@ class TimeSeriesFuser:
                 for c in merged.columns
                 if c not in (TS_COL, *INTERNAL_COLS) and c != presort
             ]
-            merged = forward_fill(merged, self.sort_cols(), fill_cols)
+            # Small file-backed stream: one window (see module docstring).
+            est = (
+                ops_util.estimated_input_bytes(merged)
+                if all(src.df is None for src, _ in frames)
+                else None
+            )
+            small = est is not None and est < ops_util.SMALL_INPUT_BYTES
+            merged = forward_fill(
+                merged, self.sort_cols(), fill_cols, num_partitions=1 if small else None
+            )
 
         if sort:
             merged = merged.orderBy(*[F.col(c) for c in order_cols])

@@ -157,8 +157,11 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     return df
 
 
-#: Below this estimated input size the per-row (projection) signature
-#: strategies win — execution is stage-count-bound, not CPU-bound.
+#: Below this estimated input size execution is stage-count-bound, not
+#: CPU-bound. Two users: the per-row (projection) signature strategies win
+#: below it (dedup, similarity), and the fuser forward-fills a file-backed
+#: stream below it in one window instead of the bucketed scan
+#: (operators.fuse).
 SMALL_INPUT_BYTES = 64 << 20
 
 
@@ -198,6 +201,7 @@ def estimated_input_bytes(df: DataFrame):
     guard (``dedup._maybe_cache``) measures the relation instead (or
     takes a caller ``size_hint``)."""
     import os
+    from urllib.parse import unquote, urlparse
 
     try:
         files = df.inputFiles()
@@ -207,7 +211,8 @@ def estimated_input_bytes(df: DataFrame):
         return None
     total = 0
     for f in files:
-        p = f[7:] if f.startswith("file://") else f.removeprefix("file:")
+        # inputFiles() returns escaped URIs: a space is %20, a % is %25.
+        p = unquote(urlparse(f).path) if f.startswith("file:") else f
         try:
             total += os.path.getsize(p)
         except OSError:
