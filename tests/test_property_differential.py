@@ -35,19 +35,33 @@ SETTINGS = settings(
 )
 
 
-@given(rows=stream, step=st.sampled_from(["7l", "10l", "25l"]), ffill=st.booleans())
+@given(
+    rows=stream,
+    step=st.sampled_from(["7l", "10l", "25l"]),
+    ffill=st.booleans(),
+    batch_end=st.booleans(),
+    nulls=st.sets(st.integers(0, 24)),
+)
 @SETTINGS
-def test_resample_handler_vs_vectorized(spark, rows, step, ffill):
-    data = [Row(__timestamp=t, v=float(v)) for t, v in rows]
-    df = spark.createDataFrame(data)
+def test_resample_handler_vs_vectorized(spark, rows, step, ffill, batch_end, nulls):
+    # A null value is an event like any other: blanks after it carry null,
+    # not the last non-null value.
+    data = [
+        Row(__timestamp=t, v=None if i in nulls else float(v))
+        for i, (t, v) in enumerate(rows)
+    ]
+    df = spark.createDataFrame(data, "__timestamp long, v double")
     ffill_keys = ["v"] if ffill else []
 
-    h = BatchEveryIntervalHandler(step, ffill_keys=ffill_keys)
+    h = BatchEveryIntervalHandler(
+        step, ffill_keys=ffill_keys, process_batch_end=batch_end
+    )
     replay(df, h)
     got = h.get_results()
 
     want_df = resample_last_interval(
-        df, step, value_cols=["v"], ffill_keys=ffill_keys, tiebreak_cols=[]
+        df, step, value_cols=["v"], ffill_keys=ffill_keys, tiebreak_cols=[],
+        process_batch_end=batch_end,
     )
     want = [r.asDict() for r in want_df.orderBy("__timestamp").collect()]
     assert got == want

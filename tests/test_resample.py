@@ -11,7 +11,12 @@ interval-handler behavior (tests/integration/test_batchinterval_fill.py:
 
 from datetime import datetime, timezone
 
-from timeseriesfuser_spark.operators.resample import resample_last_interval
+import pytest
+
+from timeseriesfuser_spark.operators.resample import (
+    _SPINE_CHUNK,
+    resample_last_interval,
+)
 
 T0 = int(datetime(2020, 1, 1, tzinfo=timezone.utc).timestamp() * 1000)
 
@@ -122,3 +127,54 @@ def test_no_gap_fill(spark):
     rows = out_rows(out)
     assert [r[1] for r in rows] == list("ABCDE")
     assert [r[0] for r in rows] == [T0 + 1000 + 5000 * i for i in range(5)]
+
+
+def _jobs(spark, build):
+    """Spark jobs started while ``build()`` constructs its DataFrame."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None) or [])
+    build()
+    return len(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+
+def _events(spark):
+    rows = [(T0 + i * 7_300 + 137, "xyz"[i % 3], float(i)) for i in range(60)]
+    return spark.createDataFrame(rows, "__timestamp long, k string, v double")
+
+
+@pytest.mark.parametrize("keys", [[], ["k"]])
+def test_gap_fill_plan_has_no_shuffled_join(spark, keys):
+    # Read before any action, so AQE has not yet turned a small shuffled
+    # join into a broadcast one: any join of the buckets would show here.
+    out = resample_last_interval(
+        _events(spark), "1s", keys=keys, ffill_keys=["v"]
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan
+    assert "ShuffledHashJoin" not in plan
+    spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize("keys", [[], ["k"]])
+def test_gap_fill_builds_with_no_job(spark, keys):
+    df = _events(spark)
+    assert _jobs(
+        spark,
+        lambda: resample_last_interval(df, "1s", keys=keys, ffill_keys=["v"]),
+    ) == 0
+    spark.catalog.clearCache()
+
+
+def test_long_gap_spans_chunks_with_carry(spark):
+    n = 20_000
+    assert n > 2 * _SPINE_CHUNK
+    rows = [(T0 + 100, "A", "A"), (T0 + n * 1000 + 100, "B", "B")]
+    out = resample_last_interval(mk(spark, rows), "1s", ffill_keys=["Letter"])
+    got = out_rows(out)
+    assert len(got) == n + 1
+    assert [r[0] for r in got] == [T0 + 1000 * i for i in range(1, n + 2)]
+    assert got[0] == (T0 + 1000, "A", "A")
+    assert got[-2] == (T0 + n * 1000, "A", None)
+    assert got[-1] == (T0 + (n + 1) * 1000, "B", "B")
+    assert all(r[1] == "A" and r[2] is None for r in got[1:-1])
+    spark.catalog.clearCache()

@@ -257,7 +257,6 @@ def forward_fill(
     cols: Sequence[str],
     num_partitions: Optional[int] = None,
     bounds: Optional[List[float]] = None,
-    bucket_col: Optional[Column] = None,
 ) -> DataFrame:
     """LOCF-fill ``cols`` in global ``order_by`` order.
 
@@ -267,26 +266,18 @@ def forward_fill(
     within-bucket window applies the full tuple order.
 
     ``bounds``: precomputed range-bucket boundaries on ``order_by[0]``. A
-    caller that already knows the distribution (resample's uniform spine)
-    passes them to skip the quantile pass — the boundaries only control
-    task balance, not correctness, so any monotone cut list is valid.
-
-    ``bucket_col``: fully in-plan alternative to ``bounds`` — a Column
-    computing a non-negative bucket id that is MONOTONE in ``order_by[0]``
-    (rows tied on the first order column must map to one bucket; ids at or
-    above ``num_partitions`` share the last bucket). With it this operator
-    runs ZERO driver-side jobs at construction. Used by resample's uniform
-    spine, whose bucket id is plain arithmetic over the already-computed
-    bounds relation.
+    caller that already knows the distribution passes them to skip the
+    quantile pass — the boundaries only control task balance, not
+    correctness, so any monotone cut list is valid.
 
     The input is read twice by the caller's action and not persisted
-    here (see :func:`_bucketed_scan`); resample persists its expensive
-    spine join before calling (operators.resample._gap_fill_tail).
+    here (see :func:`_bucketed_scan`); a caller with an expensive input
+    persists it before calling.
     """
     cols = [c for c in cols if c in df.columns]
     if not cols:
         return df
     return _bucketed_scan(
         df, order_by, [(c, c, "last") for c in cols],
-        num_buckets=num_partitions, bounds=bounds, bucket_col=bucket_col,
+        num_buckets=num_partitions, bounds=bounds,
     )

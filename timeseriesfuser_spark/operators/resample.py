@@ -20,7 +20,7 @@ test_batchinterval_fill.py):
   (classes.py:634) is tautological: ``process()`` always leaves
   ``next_batch_ts`` strictly greater than the last event's ts, so the
   reference emits unconditionally. With ``False`` the partial interval is
-  dropped (spine ends at the last boundary <= max_ts);
+  dropped (output ends at the last boundary <= max_ts);
 - day ('d') grids anchor at the FIRST EVENT's local midnight
   (classes.py:787-795 + _initialize_timing), not the epoch. For '1d' the
   two grids coincide (every midnight is a grid point), so the epoch
@@ -28,32 +28,39 @@ test_batchinterval_fill.py):
   the anchored-day path.
 
 Physical plan (SURVEY.md §2.6 T3): partial-aggregated ``max_by`` per bucket
-(map-side combine, one shuffle on (keys, bucket)) + a two-level
-sequence/explode time spine (bounded per-row array size, re-shuffled between
-levels so no task materializes the whole spine) + left join + windowed carry
-(per-key window, or the two-pass range-partitioned fill for the global
-case). No single-task stage proportional to data size.
+(map-side combine, one shuffle on (keys, bucket)), then the gap fill as an
+expansion of that buckets relation: each non-empty interval emits its own
+label and every blank label up to the next non-empty interval of its key,
+taking the carry from its own last event. The next interval is a per-key
+``lead`` window, or, ungrouped, the shared bucketed prefix scan over
+in-plan equal-width buckets — no time spine, no join against one and no
+forward-fill pass over it. Labels come from a two-level sequence/explode
+(at most ``_SPINE_CHUNK`` labels per array); a single long gap is
+generated by the task that holds its bucket row. No single-task stage
+proportional to data size.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import Callable, List, Optional, Sequence
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from timeseriesfuser_spark.ops.util import track_persist
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from timeseriesfuser_spark.intervals import boundary_label_col, interval_to_ms
-from timeseriesfuser_spark.operators.fill import forward_fill
+from timeseriesfuser_spark.intervals import (
+    boundary_label_col,
+    floor_boundary_col,
+    interval_to_ms,
+)
+from timeseriesfuser_spark.operators.fill import _bucketed_scan
+from timeseriesfuser_spark.ops.util import track_persist
 from timeseriesfuser_spark.sources.readers import SEQ_COL, SRC_ID_COL, TS_COL
 
 _BUCKET = "__bucket"
 _ROW = "__row"
-_CARRY = "__carry"
+_HI = "__hi"
 _ANCHOR = "__day_anchor"
 _SPINE_CHUNK = 8192  # boundaries per inner sequence array
 
@@ -82,12 +89,13 @@ def resample_last_interval(
     timezone, DST-correct (reference classes.py:787-795), instead of fixed
     24h UTC steps.
 
-    ``cache``: the gap-fill path persists two multi-consumer relations
-    (MEMORY_AND_DISK) that stay registered for the session — the consumer
-    runs after this function returns, so there is no unpersist point.
-    Pass ``cache=False`` in long-lived sessions that call this in a loop:
-    no cache entries are registered, at the cost of re-running the input
-    aggregation per plan branch (bounds + spine join; ~2 extra passes).
+    ``cache``: the gap-fill path persists one relation, the per-interval
+    buckets (MEMORY_AND_DISK), which stays registered for the session —
+    the consumer runs after this function returns, so there is no
+    unpersist point. Pass ``cache=False`` in long-lived sessions that call
+    this in a loop: no cache entry is registered, at the cost of
+    re-running the input aggregation for every read of the buckets — none
+    extra when keyed, up to two (bounds and scan seeds) ungrouped.
     """
     iv = interval.strip()
     if tz is not None:
@@ -130,13 +138,13 @@ def resample_last_interval(
 
     # Last event per (keys, bucket): single max_by of the whole row struct so
     # all columns come from ONE row (ties broken by ts, then arrival order).
-    # __maxts rides along so the spine bounds derive from THIS aggregate —
-    # one scan of the input, not two.
+    # __hi (the bucket's max ts) rides along so the end boundary derives
+    # from THIS aggregate — one scan of the input, not two.
     order_key = F.struct(ts, *[F.col(c) for c in tiebreak_cols])
     row_struct = F.struct(*[F.col(c) for c in value_cols])
     buckets = bucketed.groupBy(*keys, _BUCKET).agg(
         F.max_by(row_struct, order_key).alias(_ROW),
-        F.max(ts).alias("__maxts"),
+        F.max(ts).alias(_HI),
     )
 
     if not gap_fill:
@@ -144,182 +152,116 @@ def resample_last_interval(
         out_cols += [F.col(_ROW)[c].alias(c) for c in value_cols]
         return buckets.select(*out_cols)
 
-    # The buckets relation (<= one row per non-empty interval) feeds the
-    # plan branches below (bounds -> spine, and the spine join); persist
-    # it so the input aggregation runs once. LAZY persist, not
-    # localCheckpoint: on a dense grid this relation approaches input
-    # size (30M rows / 1m grid -> 13M buckets) and checkpoint blocks
-    # always hit disk-backed storage — measured 83 s vs 22 s at 30M
-    # (the same corpus-sized-relation reversal as ops.text's tfidf).
-    # Trade-off: one evictable MEMORY_AND_DISK cache entry per
+    def end_boundary(mx: Column) -> Column:
+        # label(mx) = floor(mx) + step in BOTH the on-boundary and
+        # mid-interval cases: the final partial interval is always flushed
+        # (reference finalize, classes.py:627-637 — see module docstring).
+        floor_end = floor_boundary_col(mx, step, offset_ms)
+        return floor_end + F.lit(step) if process_batch_end else floor_end
+
+    return _expand_gaps(
+        buckets, ts_col, keys, value_cols, ffill_keys, step, end_boundary,
+        lambda label: label, num_partitions=num_partitions, cache=cache,
+    )
+
+
+def _expand_gaps(
+    buckets: DataFrame,
+    ts_col: str,
+    keys: List[str],
+    value_cols: Sequence[str],
+    ffill_keys: Sequence[str],
+    step: int,
+    end_boundary: Callable[[Column], Column],
+    label_ts: Callable[[Column], Column],
+    num_partitions: Optional[int] = None,
+    cache: bool = True,
+) -> DataFrame:
+    """Gap fill as an expansion of ``buckets`` (one row per non-empty
+    (keys, interval): ``keys``, integral label ``__bucket``, last-event
+    struct ``__row`` and ``__hi``). Each row emits its own label and every
+    blank label up to the next non-empty bucket of its group, or up to the
+    group's end boundary ``end_boundary(max(__hi))`` for the last one.
+    Blanks carry only the ``ffill_keys`` of the row's event — even a null
+    value is carried (the carry is per event, not last-non-null); every
+    other value column is null. Rows past the end boundary (the dropped
+    final partial interval under ``process_batch_end=False``) emit
+    nothing. ``label_ts`` maps a label to the output ``ts_col``.
+
+    The next bucket is ``lead`` over a per-group window (the end boundary
+    comes from the same window with a whole-group frame); ungrouped, it is
+    a strictly-before ``min`` scan in descending label order
+    (:func:`_bucketed_scan`) with an equal-width in-plan bucket id over
+    the broadcast 1-row ``[min label, end boundary]``: no construction
+    job, and each scan bucket holds at most width/step rows whatever the
+    data's skew. A gap is generated by the task that holds its bucket
+    row, in chunks of ``_SPINE_CHUNK`` labels, so no per-row array grows
+    with the gap's length."""
+    # The buckets relation is the input aggregation: the ungrouped path
+    # reads it three times (bounds, scan, scan seeds), the keyed path once.
+    # LAZY persist, not localCheckpoint: on a dense grid this relation
+    # approaches input size (30M rows / 1m grid -> 13M buckets) and
+    # checkpoint blocks always hit disk-backed storage — measured 83 s vs
+    # 22 s at 30M (the same corpus-sized-relation reversal as ops.text's
+    # tfidf). Trade-off: one evictable MEMORY_AND_DISK cache entry per
     # invocation stays registered for the session (the consumer runs
     # after this function returns, so there is no unpersist point);
     # cache=False opts out for loop-calling sessions.
     if cache:
         buckets = track_persist(buckets.persist(StorageLevel.MEMORY_AND_DISK))
-
-    # --- time spine (bounds from the tiny buckets relation) -------------- #
-    mx = F.max("__maxts")
-    pmod_end = F.pmod(mx - F.lit(offset_ms), F.lit(step))
-    floor_end = (mx - pmod_end).cast("long")
-    if process_batch_end:
-        # label(mx) = floor_end + step in BOTH the on-boundary and
-        # mid-interval cases: the final partial interval is always flushed
-        # (reference finalize, classes.py:627-637 — see module docstring).
-        bmax = floor_end + F.lit(step)
+    bucket, nxt, bmax = F.col(_BUCKET), F.col("__next"), F.col("__bmax")
+    if keys:
+        w = Window.partitionBy(*keys).orderBy(_BUCKET)
+        whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        rel = buckets.select(
+            *keys, _BUCKET, _ROW,
+            F.lead(_BUCKET).over(w).alias("__next"),
+            end_boundary(F.max(_HI).over(whole)).alias("__bmax"),
+        ).filter(bucket <= bmax)
     else:
-        bmax = floor_end
-    # min bucket label == label(min ts): the label is monotone in ts.
-    bounds = buckets.groupBy(*keys).agg(
-        F.min(_BUCKET).alias("__bmin"),
-        bmax.alias("__bmax"),
+        n = num_partitions or int(
+            buckets.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+        )
+        b1 = F.broadcast(
+            buckets.agg(
+                F.min(_BUCKET).alias("__bmin"), end_boundary(F.max(_HI)).alias("__bmax")
+            )
+        )
+        width = (
+            f"greatest({step}L, ((__bmax - __bmin) div {n} div {step} + 1) * {step}L)"
+        )
+        rel = _bucketed_scan(
+            buckets.crossJoin(b1).filter(bucket <= bmax).withColumn("__desc", -bucket),
+            ["__desc"], [("__next", _BUCKET, "min")], inclusive=False,
+            num_buckets=n, bucket_col=F.expr(f"(__bmax - `{_BUCKET}`) div {width}"),
+        )
+    end = F.least(F.coalesce(nxt - F.lit(step), bmax), bmax)
+    chunk = step * _SPINE_CHUNK
+    chunks = rel.select(
+        *keys, _BUCKET, _ROW, end.alias("__end"),
+        F.explode(F.sequence(bucket, end, F.lit(chunk))).alias("__chunk"),
     )
-    buckets = buckets.drop("__maxts")
-
-    chunk_ms = step * _SPINE_CHUNK
-    empty = F.array().cast(T.ArrayType(T.LongType()))
-    chunks = bounds.select(
-        *keys,
-        "__bmax",
-        F.explode(
-            F.when(
-                F.col("__bmin") <= F.col("__bmax"),
-                F.sequence(F.col("__bmin"), F.col("__bmax"), F.lit(chunk_ms)),
-            ).otherwise(empty)
-        ).alias("__chunk"),
-    )
-    n = num_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    # Spread chunks before the inner explode so no single task generates the
-    # whole spine for a long-lived key.
-    chunks = chunks.repartition(n, *(keys + ["__chunk"]))
-    spine = chunks.select(
-        *keys,
+    label = F.col("__label")
+    filled = chunks.select(
+        *keys, _BUCKET, _ROW,
         F.explode(
             F.sequence(
                 F.col("__chunk"),
-                F.least(F.col("__chunk") + F.lit(chunk_ms - step), F.col("__bmax")),
+                F.least(F.col("__chunk") + F.lit(chunk - step), F.col("__end")),
                 F.lit(step),
             )
-        ).alias(_BUCKET),
+        ).alias("__label"),
     )
-
-    if keys:
-        # Null-safe key equality: a null-keyed group is a real group (its
-        # spine rows carry null keys too) and a plain equi-join would
-        # leave every one of its buckets unmatched. Spine derives from
-        # buckets, so the self-join needs explicit dataset aliases.
-        sp, bk = spine.alias("__rs_sp"), buckets.alias("__rs_bk")
-        cond = F.col(f"__rs_sp.{_BUCKET}") == F.col(f"__rs_bk.{_BUCKET}")
-        for k in keys:
-            cond = cond & F.col(f"__rs_sp.{k}").eqNullSafe(F.col(f"__rs_bk.{k}"))
-        joined = sp.join(bk, cond, "left").select(
-            *[F.col(f"__rs_sp.{k}").alias(k) for k in keys],
-            F.col(f"__rs_sp.{_BUCKET}").alias(_BUCKET),
-            F.col(f"__rs_bk.{_ROW}").alias(_ROW),
-        )
-    else:
-        joined = spine.join(buckets, on=[_BUCKET], how="left")
-    ffill_bucket = None
-    if not keys and ffill_keys:
-        # The ungrouped gap-filled spine is a UNIFORM grid over
-        # [__bmin, __bmax]: equal-width cuts (step-aligned) are exact
-        # equal-depth range buckets, so forward_fill skips its quantile
-        # pass entirely. The bucket id is plain integer arithmetic over
-        # the 1-row bounds relation, broadcast onto every spine row
-        # IN-PLAN (r15) — the previous bounds.first() was a serial
-        # driver job that also force-materialized the buckets cache at
-        # op-construction. Same cuts as the old driver-built list:
-        # width = max(step, (span // n // step + 1) * step),
-        # bucket(x) = min((x - bmin) // width, #cuts).
-        b1 = F.broadcast(
-            bounds.select(
-                F.col("__bmin").alias("__ffb_min"),
-                F.col("__bmax").alias("__ffb_max"),
-            )
-        )
-        joined = joined.crossJoin(b1)
-        width = (
-            f"greatest({step}L, ((__ffb_max - __ffb_min) div {n} "
-            f"div {step} + 1) * {step}L)"
-        )
-        ffill_bucket = F.expr(
-            f"least((`{_BUCKET}` - __ffb_min) div {width}, "
-            f"least({n - 1}L, (__ffb_max - __ffb_min) div {width}))"
-        )
-    return _gap_fill_tail(
-        joined, ts_col, keys, value_cols, ffill_keys,
-        ffill_bucket=ffill_bucket, ffill_buckets=n, cache=cache,
+    ffill_keys = set(ffill_keys)
+    return filled.select(
+        label_ts(label).alias(ts_col),
+        *keys,
+        *[
+            (F.col(_ROW)[c] if c in ffill_keys
+             else F.when(label == bucket, F.col(_ROW)[c])).alias(c)
+            for c in value_cols
+        ],
     )
-
-
-def _gap_fill_tail(
-    joined: DataFrame,
-    ts_col: str,
-    keys: List[str],
-    value_cols: Sequence[str],
-    ffill_keys: Sequence[str],
-    ffill_bucket: Optional[F.Column] = None,
-    ffill_buckets: Optional[int] = None,
-    cache: bool = True,
-) -> DataFrame:
-    """Shared gap-fill projection: blank boundaries carry only the
-    ``ffill_keys`` of the previous event (even a null value is carried —
-    the carry struct marks event presence, not non-nullness).
-
-    ``ffill_bucket`` (an in-plan bucket-id Column over ``joined``, ids
-    below ``ffill_buckets``) is ONLY valid when ``joined`` is a fully
-    gap-filled UNIFORM spine (one row per grid step): equal-width cuts
-    are exact equal-depth range buckets there. For any non-uniform
-    ``joined`` (e.g. gap_fill=False output, or raw event rows) pass
-    ``None`` so ``forward_fill`` runs its quantile pass — equal-width cuts
-    over a skewed distribution silently degrade to unbalanced partitions."""
-    out_cols: List[F.Column] = [F.col(_BUCKET).alias(ts_col)] + [
-        F.col(k) for k in keys
-    ]
-    ffill_keys = list(ffill_keys)
-    if ffill_keys:
-        blank = F.col(_ROW).isNull()
-        carry_src = F.when(
-            ~blank, F.struct(*[F.col(_ROW)[k].alias(k) for k in ffill_keys])
-        )
-        joined = joined.withColumn(_CARRY, carry_src)
-        if keys:
-            w = (
-                Window.partitionBy(*keys)
-                .orderBy(_BUCKET)
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-            joined = joined.withColumn(_CARRY, F.last(_CARRY, ignorenulls=True).over(w))
-        else:
-            # With the in-plan bucket id (r15) forward_fill runs NO
-            # construction-time actions; the final plan reads ``joined``
-            # twice (fill branch + per-bucket seeds branch). ``joined``
-            # is the spine join — an expensive subplan — so persist it
-            # once here: both branches share the cache build within the
-            # one action (also pins pass-consistency: both branches see
-            # the same rows). Lazy MEMORY_AND_DISK, same trade-off note
-            # as the buckets persist above.
-            if cache:
-                joined = track_persist(joined.persist(StorageLevel.MEMORY_AND_DISK))
-            joined = forward_fill(
-                joined, [_BUCKET], [_CARRY], num_partitions=ffill_buckets,
-                bucket_col=ffill_bucket,
-            )
-        for c in value_cols:
-            if c in ffill_keys:
-                out_cols.append(
-                    F.when(F.col(_ROW).isNull(), F.col(_CARRY)[c])
-                    .otherwise(F.col(_ROW)[c])
-                    .alias(c)
-                )
-            else:
-                out_cols.append(F.col(_ROW)[c].alias(c))
-    else:
-        out_cols += [F.col(_ROW)[c].alias(c) for c in value_cols]
-
-    return joined.select(*out_cols)
 
 
 def _resample_day_tz(
@@ -340,8 +282,8 @@ def _resample_day_tz(
     anchored at each key's FIRST event (reference classes.py:787-795 +
     _initialize_timing: the first boundary is the first event's own local
     midnight + N days; every later boundary steps N days). Events and the
-    spine are bucketed against the SAME anchored grid — grid dates
-    ``anchor + k*N`` — so no bucket can miss the spine join.
+    gap fill use the SAME anchored grid — grid dates ``anchor + k*N`` — so
+    every blank lands on a grid date.
 
     Documented deviation: the reference's boundary generator steps a fixed
     N*24h in *milliseconds*, so after a DST shift its boundaries drift off
@@ -350,12 +292,13 @@ def _resample_day_tz(
     midnight in that timezone").
 
     Scale: the grid is per-key *dates* — #keys x #days/N rows (a 100-year
-    global grid is 36,525 rows) — so the per-key bounds collect and the
-    driver-built spine are tiny by construction. Event labeling is
-    columnar (datediff against a broadcast per-key anchor date, JVM-side,
-    whole-stage codegen); buckets join the spine on (keys, grid DATE), and
-    the date converts to epoch-ms once, in one Spark expression, after the
-    join — driver zoneinfo math never has to bit-match Spark tz math."""
+    global grid is 36,525 rows) — so the per-key bounds are tiny by
+    construction. Event labeling is columnar (datediff against a
+    broadcast per-key anchor date, JVM-side, whole-stage codegen); the
+    gap fill is :func:`_expand_gaps` over grid day numbers with a step of
+    N days, and each label converts to epoch-ms once, in one Spark
+    expression, after the expansion — driver zoneinfo math never has to
+    bit-match Spark tz math."""
     days = int(interval.strip()[:-1])
     keys = list(keys)
     if tiebreak_cols is None:
@@ -371,15 +314,14 @@ def _resample_day_tz(
 
     ts = F.col(ts_col)
 
-    # Per-key stream bounds AND grid-step counts, all on executors — the
-    # spine used to be a driver-side Python list (#keys × #days dicts: a
-    # driver OOM at 1M keys × years). One eager localCheckpoint: the
-    # relation is #keys rows (small by construction), it is consumed by
-    # two plan branches (anchors join + spine explode) which would each
-    # recompute the aggregation, and the lineage cut gives the derived
-    # anchors/spine fresh attribute ids so the joins back onto `df` can't
-    # hit self-join ambiguity. Local dates come from the same Spark tz
+    # Per-key stream bounds, all on executors — the grid used to be a
+    # driver-side Python list (#keys × #days dicts: a driver OOM at 1M
+    # keys × years). One eager localCheckpoint: the relation is #keys rows
+    # (small by construction), and the lineage cut gives the derived
+    # anchors fresh attribute ids so the join back onto `df` can't hit
+    # self-join ambiguity. Local dates come from the same Spark tz
     # expression used for event labeling below — one tz database for both.
+    # Grid points are day numbers (days since 1970-01-01) from here on.
     def _local_date(col: F.Column) -> F.Column:
         return F.to_date(F.from_utc_timestamp(F.timestamp_millis(col), tz))
 
@@ -392,30 +334,34 @@ def _resample_day_tz(
             _local_date(F.col("__mn")).alias(_ANCHOR),
             _local_date(F.col("__mx")).alias("__mxd"),
         )
-        .withColumn(
-            # Grid midnights <= mx are exactly grid dates <= mx's local
-            # date (midnight(d) <= mx iff d <= mx_date): floor(diff/N)
-            # steps after the anchor. label(mx) = first grid date after,
-            # always appended under process_batch_end (final partial
-            # flush; a boundary-sitting mx still emits, at +N days).
-            "__n",
+        .select(
+            *keys,
+            _ANCHOR,
+            # End boundary. Grid midnights <= mx are exactly grid dates <=
+            # mx's local date (midnight(d) <= mx iff d <= mx_date):
+            # floor(diff/N) steps after the anchor. label(mx) = first grid
+            # date after, always the end under process_batch_end (final
+            # partial flush; a boundary-sitting mx still emits, at +N days).
             (
-                F.floor(F.datediff(F.col("__mxd"), F.col(_ANCHOR)) / F.lit(days))
-                + F.lit(1 if process_batch_end else 0)
-            ).cast("int"),
+                F.unix_date(F.col(_ANCHOR))
+                + (
+                    F.floor(F.datediff(F.col("__mxd"), F.col(_ANCHOR)) / F.lit(days))
+                    + F.lit(1 if process_batch_end else 0)
+                ).cast("int")
+                * F.lit(days)
+            ).alias(_HI),
         )
         .localCheckpoint(eager=True)
     )
-    anchors = binfo.select(*keys, _ANCHOR)
 
     # Columnar event labels on the anchored grid: the smallest grid date
     # strictly after the event. (floor(diff/N)+1)*N > diff for any diff>=0,
     # and a later date's local midnight is after any instant of an earlier
     # date, so the label is strictly greater even for an event exactly ON
     # a grid midnight (its local date IS the grid date -> next grid point).
-    # Qualified aliases: anchors (and the spine below) both derive from
-    # binfo, so Column-object conditions hit the ambiguous-self-join check.
-    an = anchors.alias("__an")
+    # Qualified aliases: the anchors derive from `df`, so Column-object
+    # conditions hit the ambiguous-self-join check.
+    an = binfo.alias("__an")
     if keys:
         # Null-safe key join: a null-keyed group has an anchor row like
         # any other; a plain equi-join would drop its events entirely.
@@ -424,7 +370,9 @@ def _resample_day_tz(
             term = df[k].eqNullSafe(F.col(f"__an.`{k}`"))
             acond = term if acond is None else acond & term
         labeled = df.join(F.broadcast(an), acond, "inner").select(
-            *[df[c] for c in df.columns], F.col(f"__an.`{_ANCHOR}`")
+            *[df[c] for c in df.columns],
+            F.col(f"__an.`{_ANCHOR}`"),
+            F.col(f"__an.`{_HI}`"),
         )
     else:
         labeled = df.crossJoin(F.broadcast(an))
@@ -434,53 +382,29 @@ def _resample_day_tz(
         * F.lit(days)
     ).cast("int")
     bucketed = labeled.withColumn(
-        _BUCKET, F.date_add(F.col(_ANCHOR), step_days)
+        _BUCKET, F.unix_date(F.col(_ANCHOR)) + step_days
     ).drop(_ANCHOR)
 
     order_key = F.struct(ts, *[F.col(c) for c in tiebreak_cols])
     row_struct = F.struct(*[F.col(c) for c in value_cols])
     buckets = bucketed.groupBy(*keys, _BUCKET).agg(
-        F.max_by(row_struct, order_key).alias(_ROW)
+        F.max_by(row_struct, order_key).alias(_ROW),
+        F.max(_HI).alias(_HI),
     )
 
-    # Grid date -> epoch ms of local midnight, applied uniformly after the
-    # join (session tz is UTC per package requirement; see conftest).
-    bucket_ms = F.unix_millis(
-        F.to_utc_timestamp(F.col(_BUCKET).cast("timestamp"), tz)
-    ).cast("long")
+    # Grid day number -> epoch ms of local midnight, applied to the output
+    # labels only (session tz is UTC per package requirement; see conftest).
+    def day_ms(day: Column) -> Column:
+        return F.unix_millis(
+            F.to_utc_timestamp(F.date_from_unix_date(day).cast("timestamp"), tz)
+        )
 
     if not gap_fill:
-        out_cols = [bucket_ms.alias(ts_col)] + [F.col(k) for k in keys]
+        out_cols = [day_ms(F.col(_BUCKET)).alias(ts_col)] + [F.col(k) for k in keys]
         out_cols += [F.col(_ROW)[c].alias(c) for c in value_cols]
         return buckets.select(*out_cols)
 
-    # Executor-side spine: explode each key's grid-date sequence. Output
-    # volume is #keys × #days/N rows distributed across the cluster —
-    # never materialized on the driver.
-    spine = binfo.select(
-        *keys,
-        F.explode(
-            F.when(
-                F.col("__n") >= 1,
-                F.transform(
-                    F.sequence(F.lit(1), F.col("__n")),
-                    lambda i: F.date_add(F.col(_ANCHOR), i * days),
-                ),
-            ).otherwise(F.array().cast("array<date>"))
-        ).alias(_BUCKET),
+    return _expand_gaps(
+        buckets, ts_col, keys, value_cols, ffill_keys, days, lambda hi: hi,
+        day_ms, cache=cache,
     )
-    sp, bu = spine.alias("__sp"), buckets.alias("__bu")
-    if keys:
-        scond = F.col(f"__sp.`{_BUCKET}`") == F.col(f"__bu.`{_BUCKET}`")
-        for k in keys:
-            scond = scond & F.col(f"__sp.`{k}`").eqNullSafe(F.col(f"__bu.`{k}`"))
-        joined = sp.join(bu, scond, "left").select(
-            *[F.col(f"__sp.`{k}`").alias(k) for k in keys],
-            F.col(f"__sp.`{_BUCKET}`").alias(_BUCKET),
-            F.col(f"__bu.`{_ROW}`").alias(_ROW),
-        )
-    else:
-        joined = spine.join(buckets, on=[_BUCKET], how="left")
-    joined = joined.withColumn(_BUCKET, bucket_ms)
-    return _gap_fill_tail(joined, ts_col, keys, value_cols, ffill_keys,
-                          cache=cache)

@@ -35,7 +35,7 @@ def cache_scope():
     """Deterministic lifecycle for operator-internal persists.
 
     Several ops persist multi-consumer intermediates (resample's gap-fill
-    buckets/spine join, the LSH block relations, …) that outlive the
+    buckets, the LSH block relations, …) that outlive the
     returned DataFrame's plan — lazy evaluation runs after the op
     returns, so the op itself has no unpersist point. Long-lived sessions
     calling such ops in a loop accumulate one evictable cache entry per
