@@ -1,6 +1,7 @@
 """cache_scope lifecycle: ops' internal MEMORY_AND_DISK persists release
-deterministically when the scope exits (VERDICT r7 #6 — the stronger fix
-beyond the cache=False opt-out), without touching caller-owned caches."""
+deterministically when the scope exits (VERDICT r7 #6), without touching
+caller-owned caches. The resample calls are ungrouped epoch-grid gap
+fills, the one resample path that persists (its buckets relation)."""
 
 import pytest
 from pyspark.sql import Row
@@ -30,7 +31,7 @@ class TestCacheScope:
         assert _cache_empty(spark)
         with cache_scope():
             out = resample_last_interval(
-                _events(spark), "1m", keys=["k"], gap_fill=True
+                _events(spark), "1m", gap_fill=True
             )
             assert out.count() > 0
             assert not _cache_empty(spark)  # persists registered inside
@@ -54,7 +55,7 @@ class TestCacheScope:
             mine.count()
             with cache_scope():
                 resample_last_interval(
-                    _events(spark), "1m", keys=["k"], gap_fill=True
+                    _events(spark), "1m", gap_fill=True
                 ).count()
             # scope released only the op's persists — not the caller's
             assert not _cache_empty(spark)
@@ -66,7 +67,7 @@ class TestCacheScope:
         spark.catalog.clearCache()
         with cache_scope():
             resample_last_interval(
-                _events(spark), "1m", keys=["k"], gap_fill=True
+                _events(spark), "1m", gap_fill=True
             ).count()
             with cache_scope():
                 docs = spark.createDataFrame(
@@ -81,7 +82,7 @@ class TestCacheScope:
     def test_no_scope_is_noop(self, spark):
         spark.catalog.clearCache()
         out = resample_last_interval(
-            _events(spark), "1m", keys=["k"], gap_fill=True
+            _events(spark), "1m", gap_fill=True
         )
         assert out.count() > 0
         # legacy behavior preserved: entries stay registered (session-long)
@@ -91,11 +92,11 @@ class TestCacheScope:
     def test_results_identical_inside_scope(self, spark):
         spark.catalog.clearCache()
         base = resample_last_interval(
-            _events(spark), "1m", keys=["k"], gap_fill=True
+            _events(spark), "1m", gap_fill=True
         ).collect()
         spark.catalog.clearCache()
         with cache_scope():
             scoped = resample_last_interval(
-                _events(spark), "1m", keys=["k"], gap_fill=True
+                _events(spark), "1m", gap_fill=True
             ).collect()
         assert sorted(map(tuple, base)) == sorted(map(tuple, scoped))

@@ -198,3 +198,33 @@ def test_null_variant_parity(spark, variant_dir, vddb, name):
     sdf = contract.QUERIES[name](spark, variant_dir).toPandas()
     ddf = vddb.sql(contract.ORACLES[name]).df()
     assert_parity(sdf, ddf, name)
+
+
+@pytest.mark.parametrize(
+    "interval,tz", [("1s", None), ("2d", None), ("1d", "Europe/Berlin")]
+)
+def test_resample_null_timestamp_rule_same_on_every_grid(spark, interval, tz):
+    """A key whose every timestamp is null: with ``gap_fill=False`` it
+    yields one null-labelled row holding its last event, on the epoch and
+    the day grids alike; the gap-filled grid skips it."""
+    from timeseriesfuser_spark.operators.resample import resample_last_interval
+
+    t0 = 1_700_000_000_000
+    df = spark.createDataFrame(
+        [(t0 + 500, "a", 1.0, 0), (t0 + 90_000_000, "a", 2.0, 1),
+         (None, "z", 3.0, 2), (None, "z", 4.0, 3)],
+        "__timestamp long, k string, v double, seq long",
+    )
+    kw = dict(tz=tz, value_cols=["v"], tiebreak_cols=["seq"])
+    raw = resample_last_interval(df, interval, keys=["k"], gap_fill=False, **kw)
+    assert [(r["k"], r["v"]) for r in raw.filter("__timestamp IS NULL").collect()] == [
+        ("z", 4.0)
+    ]
+    assert raw.filter("k = 'a' AND __timestamp IS NULL").count() == 0
+    filled = resample_last_interval(df, interval, keys=["k"], **kw)
+    assert filled.filter("k = 'z' OR __timestamp IS NULL").count() == 0
+    assert filled.count() > 0
+    only_null = df.filter("k = 'z'").drop("k")
+    rows = resample_last_interval(only_null, interval, gap_fill=False, **kw).collect()
+    assert [tuple(r) for r in rows] == [(None, 4.0)]
+    assert resample_last_interval(only_null, interval, **kw).count() == 0

@@ -2,11 +2,16 @@
 across independent implementations of the same semantics —
 
 - resample: the stateful row-level handler vs the vectorized DataFrame plan;
+- day-grid resample (local-midnight grids, DST): the plan vs a zoneinfo
+  oracle of the module docstring's rules;
 - forward fill: the two-pass range-bucketed scheme vs a naive
   single-partition window.
 
 Each pair is implemented independently, so agreement on random inputs is
 strong evidence for both."""
+
+from datetime import date, datetime, time, timedelta
+from zoneinfo import ZoneInfo
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -65,6 +70,86 @@ def test_resample_handler_vs_vectorized(spark, rows, step, ffill, batch_end, nul
     )
     want = [r.asDict() for r in want_df.orderBy("__timestamp").collect()]
     assert got == want
+
+
+def _day_grid_oracle(events, days, tz, ffill, batch_end):
+    """The resample module docstring's day-grid rules, one group, in
+    zoneinfo: anchor = first local date, label = anchor + (floor((d -
+    anchor)/N) + 1)*N, last event per label by (ts, seq), blanks up to the
+    last label (or the one before it without ``batch_end``)."""
+    zi = ZoneInfo(tz or "UTC")
+    last = {}
+    for ts, seq, v in events:
+        d = datetime.fromtimestamp(ts / 1000, zi).date().toordinal()
+        last.setdefault(d, []).append((ts, seq, v))
+    anchor = min(last)
+    labels = {}
+    for d, evs in last.items():
+        lab = anchor + ((d - anchor) // days + 1) * days
+        labels.setdefault(lab, []).extend(evs)
+    first, end = min(labels), max(labels) - (0 if batch_end else days)
+    out, carry = [], None
+    for lab in range(first, end + 1, days):
+        midnight = datetime.combine(date.fromordinal(lab), time(0), zi)
+        if lab in labels:
+            carry = max(labels[lab])[2]
+            v = carry
+        else:
+            v = carry if ffill else None
+        out.append((int(midnight.timestamp() * 1000), v))
+    return out
+
+
+# Local midnights around the 2024 DST shifts of Berlin (Mar 31, Oct 27)
+# and New York (Mar 10, Nov 3): the draws below straddle them.
+_DST_DAYS = [date(2024, 3, 8), date(2024, 3, 29), date(2024, 10, 25), date(2024, 11, 1)]
+_day_events = st.lists(
+    st.tuples(
+        st.sampled_from(["a", "b"]),
+        st.integers(0, 9),  # day offset from the drawn start date
+        st.one_of(st.just(0), st.integers(0, 86_399_999)),  # ms into that day
+        st.one_of(st.none(), st.integers(0, 99)),
+    ),
+    min_size=1,
+    max_size=20,
+)
+
+
+@given(
+    rows=_day_events,
+    start=st.sampled_from(_DST_DAYS),
+    days=st.sampled_from([1, 2, 3]),
+    tz=st.sampled_from([None, "Europe/Berlin", "America/New_York"]),
+    keyed=st.booleans(),
+    ffill=st.booleans(),
+    batch_end=st.booleans(),
+)
+@SETTINGS
+def test_resample_day_grid_vs_zoneinfo_oracle(
+    spark, rows, start, days, tz, keyed, ffill, batch_end
+):
+    # An offset of 0 ms is the local midnight itself; the ms offset is
+    # added to that midnight, so a spring-forward day still gets events.
+    zi = ZoneInfo(tz or "UTC")
+    data = []
+    for seq, (k, day, ms, v) in enumerate(rows):
+        midnight = datetime.combine(start + timedelta(days=day), time(0), zi)
+        ts = int(midnight.timestamp() * 1000) + ms
+        data.append((ts, k if keyed else None, seq, None if v is None else float(v)))
+    df = spark.createDataFrame(data, "__timestamp long, k string, seq long, v double")
+    out = resample_last_interval(
+        df, f"{days}d", tz=tz, keys=["k"] if keyed else [], value_cols=["v"],
+        ffill_keys=["v"] if ffill else [], tiebreak_cols=["seq"],
+        process_batch_end=batch_end,
+    )
+    got = sorted((r["k"] if keyed else None, r["__timestamp"], r["v"])
+                 for r in out.collect())
+    want = []
+    for k in {d[1] for d in data}:
+        events = [(ts, seq, v) for ts, kk, seq, v in data if kk == k]
+        want += [(k, ts, v) for ts, v in
+                 _day_grid_oracle(events, days, tz, ffill, batch_end)]
+    assert got == sorted(want, key=lambda r: (r[0] or "", r[1]))
 
 
 pair_streams = st.tuples(

@@ -155,13 +155,39 @@ def test_gap_fill_plan_has_no_shuffled_join(spark, keys):
     spark.catalog.clearCache()
 
 
+def _span_events(spark):
+    # Built from a range, not a local list: the plan's only RDD scan would
+    # then be a checkpoint. 60 events 2 h apart span five days.
+    return spark.range(60).selectExpr(
+        f"{T0} + id * 7300000 + 137 AS __timestamp",
+        "substr('xyz', cast(id % 3 AS int) + 1, 1) AS k",
+        "cast(id AS double) AS v",
+    )
+
+
+@pytest.mark.parametrize("gap_fill", [True, False])
 @pytest.mark.parametrize("keys", [[], ["k"]])
-def test_gap_fill_builds_with_no_job(spark, keys):
-    df = _events(spark)
+@pytest.mark.parametrize(
+    "interval,tz", [("1s", None), ("2d", None), ("1d", "Europe/Berlin")]
+)
+def test_gap_fill_builds_with_no_job(spark, interval, tz, keys, gap_fill):
+    spark.catalog.clearCache()  # a cached twin would show in the plan
+    df = _span_events(spark)
+    built = []
     assert _jobs(
         spark,
-        lambda: resample_last_interval(df, "1s", keys=keys, ffill_keys=["v"]),
+        lambda: built.append(resample_last_interval(
+            df, interval, tz=tz, keys=keys, gap_fill=gap_fill,
+            ffill_keys=["v"] if gap_fill else [],
+        )),
     ) == 0
+    plan = built[0]._jdf.queryExecution().executedPlan().toString()
+    day = interval.endswith("d")
+    # Only the ungrouped epoch gap fill reads its buckets more than once.
+    assert ("InMemoryTableScan" in plan) == (gap_fill and not keys and not day)
+    if day:
+        assert "Broadcast" not in plan
+        assert "ExistingRDD" not in plan  # no localCheckpoint scan
     spark.catalog.clearCache()
 
 

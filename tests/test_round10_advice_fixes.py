@@ -1,8 +1,8 @@
 """Round-10 ADVICE fixes (driver round 7):
 
-1. resample_last_interval(cache=False) leaves NO registered cache entry
-   after the result is consumed (the default cache=True persists two
-   multi-consumer relations that live until clearCache).
+1. resample_last_interval leaves NO registered cache entry on the keyed
+   and day-grid paths, and exactly one on the ungrouped epoch path, which
+   an enclosing ``cache_scope()`` releases.
 2. streaming_ohlc_1h tears down its memory-sink table and streaming query
    (awaitTermination timeout raised, q.stop + dropTempView in finally).
 3. tools.make_scaled_sf fails loudly when a source key reaches the
@@ -15,6 +15,7 @@ import sys
 import pytest
 
 from timeseriesfuser_spark.operators.resample import resample_last_interval
+from timeseriesfuser_spark.ops.util import cache_scope
 
 SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.001")
 
@@ -30,39 +31,40 @@ def _mk_events(spark):
     return spark.createDataFrame(rows, "__timestamp long, v double, tag string")
 
 
-def test_resample_cache_false_leaves_no_cache_entry(spark):
+def test_resample_keyed_registers_no_cache_entry(spark):
     spark.catalog.clearCache()
     cm = _cache_manager(spark)
     assert cm.isEmpty()
     df = _mk_events(spark)
-    out = resample_last_interval(df, "1s", ffill_keys=["v"], cache=False)
+    out = resample_last_interval(df, "1s", keys=["tag"], ffill_keys=["v"])
     assert out.count() > 0
-    assert cm.isEmpty(), "cache=False must not register any cache entry"
+    assert cm.isEmpty(), "the keyed gap fill reads its buckets once"
 
 
-def test_resample_cache_default_registers_then_results_identical(spark):
+def test_resample_ungrouped_registers_one_entry_released_by_scope(spark):
     spark.catalog.clearCache()
     cm = _cache_manager(spark)
     df = _mk_events(spark)
-    cold = resample_last_interval(df, "1s", ffill_keys=["v", "tag"], cache=False)
-    cold_rows = sorted(map(tuple, cold.collect()))
+    with cache_scope() as scope:
+        out = resample_last_interval(df, "1s", ffill_keys=["v", "tag"])
+        scoped_rows = sorted(map(tuple, out.collect()))
+        assert len(scope._dfs) == 1
+        assert not cm.isEmpty()
     assert cm.isEmpty()
-    hot = resample_last_interval(df, "1s", ffill_keys=["v", "tag"], cache=True)
-    hot_rows = sorted(map(tuple, hot.collect()))
-    assert not cm.isEmpty(), "default path still persists (perf)"
-    assert cold_rows == hot_rows
-    spark.catalog.clearCache()
+    # after the scope the plan recomputes the buckets: same rows
+    assert sorted(map(tuple, out.collect())) == scoped_rows
 
 
-def test_resample_cache_false_keyed_path(spark):
+@pytest.mark.parametrize("keys", [[], ["tag"]])
+def test_resample_day_grids_register_no_cache_entry(spark, keys):
     spark.catalog.clearCache()
     cm = _cache_manager(spark)
-    df = _mk_events(spark)
-    out = resample_last_interval(
-        df, "1s", keys=["tag"], ffill_keys=["v"], cache=False
-    )
-    assert out.count() > 0
-    assert cm.isEmpty()
+    rows = [(86_400_000 * 3 * i + 137, float(i), "AB"[i % 2]) for i in range(10)]
+    df = spark.createDataFrame(rows, "__timestamp long, v double, tag string")
+    for interval, tz in [("2d", None), ("1d", "Europe/Berlin")]:
+        out = resample_last_interval(df, interval, tz=tz, keys=keys, ffill_keys=["v"])
+        assert out.count() > 0
+        assert cm.isEmpty()
 
 
 def test_streaming_ohlc_cleans_up_query_and_sink(spark):

@@ -26,6 +26,7 @@ from timeseriesfuser_spark.ops import sampling as SA
 from timeseriesfuser_spark.ops import similarity as S
 from timeseriesfuser_spark.ops import text as X
 from timeseriesfuser_spark.ops import timeseries as TS
+from timeseriesfuser_spark.ops.util import track_persist
 from timeseriesfuser_spark.timeutils import coerce_to_epoch_ms, ts_epoch_ms_col
 
 from timeseriesfuser_spark.contract._base import (  # noqa: F401
@@ -1723,14 +1724,14 @@ def q_user_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # each period set feeds all three set ops — persist the small
     # distinct relations so the events scan runs twice, not six times
-    # (evictable; the resample_last_interval cache contract)
+    # (evictable; released when an enclosing cache_scope() exits)
     from pyspark import StorageLevel
 
-    y97 = period(852_076_800_000, 883_612_800_000).persist(
-        StorageLevel.MEMORY_AND_DISK
+    y97 = track_persist(
+        period(852_076_800_000, 883_612_800_000).persist(StorageLevel.MEMORY_AND_DISK)
     )
-    y98 = period(883_612_800_000, 915_148_800_000).persist(
-        StorageLevel.MEMORY_AND_DISK
+    y98 = track_persist(
+        period(883_612_800_000, 915_148_800_000).persist(StorageLevel.MEMORY_AND_DISK)
     )
     retained = y97.intersect(y98).agg(
         F.count(F.lit(1)).cast("long").alias("retained")

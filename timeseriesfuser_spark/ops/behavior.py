@@ -385,9 +385,9 @@ def copurchase_lift(
 
     ``cache``: the distinct (basket, item) relation feeds the totals,
     the item counts, and both pair-join sides; the default persists it
-    (MEMORY_AND_DISK, evictable — the ``resample_last_interval``
-    contract) so the distinct runs once; ``cache=False`` registers
-    nothing.
+    (MEMORY_AND_DISK, evictable; released when an enclosing
+    ``ops.util.cache_scope()`` exits) so the distinct runs once;
+    ``cache=False`` registers nothing.
     """
     if min_pair_baskets < 1:
         raise ValueError(
@@ -694,8 +694,9 @@ def rolling_active_users(
     ``cache``: the (user, day) grain feeds three consumers (bounds, dau,
     window) and Catalyst re-executes the shared subplan per consumer —
     tripling the corpus scan. The default persists the grain
-    (MEMORY_AND_DISK, evictable — the ``resample_last_interval``
-    contract); pass ``cache=False`` if the caller persists upstream.
+    (MEMORY_AND_DISK, evictable; released when an enclosing
+    ``ops.util.cache_scope()`` exits); pass ``cache=False`` if the
+    caller persists upstream.
     """
     from pyspark import StorageLevel
 

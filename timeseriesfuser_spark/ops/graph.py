@@ -295,9 +295,9 @@ def triangle_counts(
     more (both wedge sides, the closing join) — Catalyst re-executes
     shared subplans per consumer, which without caching multiplies into
     ~90 upstream scans. The default persists both at MEMORY_AND_DISK
-    (evictable; entries live until the caller's unpersist/clearCache —
-    same contract as ``resample_last_interval``). Pass ``cache=False``
-    to register nothing, e.g. when looping in a long-lived session.
+    (evictable; entries live until an enclosing ``ops.util.cache_scope()``
+    exits, or until the caller's unpersist/clearCache). Pass
+    ``cache=False`` to register nothing.
     """
     from pyspark import StorageLevel
 

@@ -548,8 +548,9 @@ def bloom_prefilter(
     bits relation DERIVED from a fact scan (the usual ``bloom_bits``
     case) that multiplies the build-side scan ``k``-fold. The default
     persists the BOUNDED bit relation (≤ min(k·n, m_bits) rows,
-    MEMORY_AND_DISK, evictable — the ``resample_last_interval``
-    contract); pass ``cache=False`` if the caller already persisted it.
+    MEMORY_AND_DISK, evictable; released when an enclosing
+    ``ops.util.cache_scope()`` exits); pass ``cache=False`` if the
+    caller already persisted it.
     """
     from pyspark import StorageLevel
 

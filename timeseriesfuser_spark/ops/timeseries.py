@@ -1332,9 +1332,8 @@ def acf_bars(
     join sides; Catalyst re-executes shared subplans per consumer, so
     without caching the events aggregation (a full fact scan) runs ~6×.
     The default persists the TINY bar relation at MEMORY_AND_DISK
-    (evictable; lives until unpersist/clearCache — the
-    ``resample_last_interval`` contract); ``cache=False`` registers
-    nothing.
+    (evictable; released when an enclosing ``ops.util.cache_scope()``
+    exits); ``cache=False`` registers nothing.
     """
     if max_lag < 1:
         raise ValueError(f"max_lag must be >= 1: {max_lag}")
@@ -1435,8 +1434,8 @@ def robust_outlier_summary(
     MAD ranks and the final flag count — Catalyst re-executes shared
     subplans per consumer (~7 upstream scans uncached). The default
     persists both 2-column projections at MEMORY_AND_DISK (evictable;
-    lives until unpersist/clearCache — the ``resample_last_interval``
-    contract); ``cache=False`` registers nothing.
+    released when an enclosing ``ops.util.cache_scope()`` exits);
+    ``cache=False`` registers nothing.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
@@ -1535,9 +1534,9 @@ def seasonal_naive_error(
     AGGREGATED grain only — bounded by #keys × time span.
 
     ``cache``: the bar relation is both self-join sides; the default
-    persists it (tiny, MEMORY_AND_DISK, evictable — the
-    ``resample_last_interval`` contract) so the fact scan runs once;
-    ``cache=False`` registers nothing.
+    persists it (tiny, MEMORY_AND_DISK, evictable; released when an
+    enclosing ``ops.util.cache_scope()`` exits) so the fact scan runs
+    once; ``cache=False`` registers nothing.
     """
     if season_bars < 1:
         raise ValueError(f"season_bars must be >= 1: {season_bars}")
@@ -1609,7 +1608,8 @@ def exact_percentiles(
     approximate screen), then one conditional-sum aggregation selecting
     the two bracketing order stats per percentile. ``cache`` persists
     the 2-column projection feeding both the count join and the rank
-    window (the resample_last_interval contract).
+    window (MEMORY_AND_DISK, evictable; released when an enclosing
+    ``ops.util.cache_scope()`` exits).
     """
     ps = [(int(a), int(b)) for a, b in percentiles]
     for num, den in ps:

@@ -34,13 +34,14 @@ class CacheScope:
 def cache_scope():
     """Deterministic lifecycle for operator-internal persists.
 
-    Several ops persist multi-consumer intermediates (resample's gap-fill
-    buckets, the LSH block relations, …) that outlive the
-    returned DataFrame's plan — lazy evaluation runs after the op
-    returns, so the op itself has no unpersist point. Long-lived sessions
-    calling such ops in a loop accumulate one evictable cache entry per
-    call; the blunt fixes are ``cache=False`` (recompute) or
-    ``spark.catalog.clearCache()`` (nukes the caller's own caches too).
+    Several ops persist multi-consumer intermediates (the ungrouped
+    epoch-grid resample's buckets, the LSH block relations, …) that
+    outlive the returned DataFrame's plan — lazy evaluation runs after
+    the op returns, so the op itself has no unpersist point. Long-lived
+    sessions calling such ops in a loop accumulate one evictable cache
+    entry per call; the blunt fix is ``spark.catalog.clearCache()`` (it
+    nukes the caller's own caches too), or, on ops that take one,
+    ``cache=False`` (recompute).
 
     This scope is the surgical fix::
 

@@ -151,7 +151,6 @@ def main():
     th.start()
 
     stats: dict = {"round1_plan": None} if args.plan_out else {}
-    round_walls: list = []
     t0 = time.perf_counter()
     if args.op == "pagerank":
         try:
@@ -226,7 +225,6 @@ def main():
         "stars": stars,
         "cycles": cycles,
         "wall_sec": round(wall, 1),
-        "round_walls": round_walls or stats.get("round_walls"),
         "exact": ok,
         "peak_scratch_bytes": peak["bytes"],
         "driver_mem": args.driver_mem,
