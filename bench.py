@@ -4,7 +4,8 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
 
     {"metric": "...", "value": total_sec, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": ...}
+     "queries": {name: sec, ...}, "errors": {...}, "control_sec": ...,
+     "sf": ..., "layers": {name: best run's tools.harness.measure record}}
 
 Each query is fully executed (noop sink — no driver collect, no disk
 write) so the measured time is plan + shuffle + compute, the same work a
@@ -16,52 +17,21 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-
-from pyspark.sql import SparkSession
 
 from timeseriesfuser_spark import contract
+from tools.harness import HEADLINE, control_workload, measure, session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-# Headline set: every family (fuse, resample, fill, sessions, relational,
-# dedup, text, similarity), weighted toward the ones with real data volume.
-HEADLINE = [
-    "fuse_merge",
-    "resample_1m_global",
-    "resample_keys_1h",
-    "forward_fill_global",
-    "sessionize_30m",
-    "tpch_q1_pricing",
-    "top_orders_per_priority",
-    "revenue_per_nation",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "text_stats",
-    "lang_id",
-    "doc_fingerprint",
-    "similarity_topk",
-    "embedding_neardup",
-]
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("timeseriesfuser_spark_bench")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = session(
+        "timeseriesfuser_spark_bench",
+        **{
+            "spark.sql.legacy.parquet.nanosAsLong": "true",
+            "spark.sql.execution.arrow.pyspark.enabled": "true",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     # Warm the JVM/reader paths so per-query times measure the query, not
     # session startup (excluded from per-query numbers either way).
@@ -70,42 +40,10 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001 — warm-up is best-effort
         print(f"# warm-up failed: {exc}", file=sys.stderr)
 
-    # Same-session machine-speed control: a fixed synthetic workload that
-    # never changes with repo code. Cross-round totals are only
-    # interpretable relative to this number — the same query set has
-    # measured 1.5-2.1x apart on the same machine on the same day
-    # (SCALE.md), so a total delta smaller than the control delta is
-    # environment, not plan. Reported as "control_sec", NOT added to the
-    # headline total (the headline set and total stay the frozen
-    # cross-round trend metric).
-    control = float("inf")
-    from pyspark.sql import functions as _F
-
-    for _ in range(3):
-        # per-iteration guard: one failed repeat must not discard an
-        # already-valid reading — the drift control matters most on
-        # exactly the flaky sessions
-        try:
-            t0 = time.perf_counter()
-            (
-                spark.range(20_000_000)
-                .select(
-                    (_F.col("id") % 997).alias("k"),
-                    _F.md5(_F.col("id").cast("string")).alias("h"),
-                )
-                .groupBy("k")
-                .agg(
-                    _F.count(_F.lit(1)).alias("n"),
-                    _F.min("h").alias("mn"),
-                    _F.max("h").alias("mx"),
-                )
-                .write.format("noop").mode("overwrite").save()
-            )
-            control = min(control, time.perf_counter() - t0)
-        except Exception as exc:  # noqa: BLE001 — control is diagnostic only
-            print(f"# control iteration failed: {exc}", file=sys.stderr)
-    if control == float("inf"):
-        control = None
+    # Reported as "control_sec", NOT added to the headline total (the
+    # headline set and total stay the frozen cross-round trend metric).
+    control = control_workload(spark)
+    if control is None:
         print("# control failed: no successful iteration", file=sys.stderr)
     else:
         print(f"# control: {control:.3f}s", file=sys.stderr)
@@ -114,26 +52,27 @@ def main() -> None:
     # "errors", never the whole benchmark (BENCH_r02 died with zero numbers
     # because the first query threw).
     times: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     errors: dict[str, str] = {}
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     for name in HEADLINE:
         fn = contract.QUERIES[name]
-        best = float("inf")
+        best = None
         try:
             for _ in range(runs):
                 # Clear persisted intermediates so no run sees another run's
                 # cache (ops may persist multiply-consumed relations).
                 spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
+                rec = measure(name, lambda: fn(spark, SF_DIR))
+                if best is None or rec["wall_s"] < best["wall_s"]:
+                    best = rec
         except Exception as exc:  # noqa: BLE001 — record and keep measuring
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
             continue
         # min-of-N: steady-state per-query time (first run pays one-off
         # codegen/classload warm-up that a long-lived cluster amortizes).
-        times[name] = round(best, 3)
+        times[name], layers[name] = best["wall_s"], best
         print(f"# {name}: {times[name]:.3f}s", file=sys.stderr)
 
     total = round(sum(times.values()), 3)
@@ -152,6 +91,7 @@ def main() -> None:
                 "errors": errors,
                 "control_sec": None if control is None else round(control, 3),
                 "sf": sf_val,
+                "layers": layers,
             }
         )
     )

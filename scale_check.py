@@ -15,12 +15,12 @@ import json
 import sys
 import time
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from timeseriesfuser_spark.operators.fill import forward_fill
 from timeseriesfuser_spark.operators.resample import resample_last_interval
 from timeseriesfuser_spark.operators.asof import asof_join
+from tools.harness import measure, session
 
 CPUS = 32
 DAY_MS = 86_400_000
@@ -59,11 +59,7 @@ def run(spark, n: int, only=None) -> dict:
         # construction (iterative ops with per-round checkpoints): the
         # construction must be inside the timed region.
         spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        if callable(df):
-            df = df()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
+        dt = measure(name, df if callable(df) else lambda: df)["wall_s"]
         out[name] = round(dt, 2)
         out[f"{name}_mrows_s"] = round(n / dt / 1e6, 2)
         print(f"#   {name}: {dt:.2f}s  ({n/dt/1e6:.2f} M rows/s)", file=sys.stderr)
@@ -452,9 +448,7 @@ def run(spark, n: int, only=None) -> dict:
             ("graph_shared_kcore", lambda: _kcop(sh_edges, 4, rounds=3)),
             ("graph_shared_assort", lambda: _daop(sh_edges)),
         ]:
-            t0 = time.perf_counter()
-            thunk().write.format("noop").mode("overwrite").save()
-            out[nm] = round(time.perf_counter() - t0, 2)
+            out[nm] = round(measure(nm, thunk)["wall_s"], 2)
         sh_edges.unpersist()
 
     # round-15: sequence pattern with negation — one per-user window on
@@ -795,10 +789,7 @@ def _leakage(spark, docs, n):
 def run_docs_one(spark, name: str, n: int) -> float:
     """One operator, one measurement (the thunk may itself run driver
     actions — iterative ops, eager persists — so time the whole thing)."""
-    thunk = _docs_ops(spark, n)[name]
-    t0 = time.perf_counter()
-    thunk().write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
+    return measure(name, _docs_ops(spark, n)[name])["wall_s"]
 
 
 def run_docs(n: int) -> dict:
@@ -1055,9 +1046,7 @@ def run_bucketjoin(spark, n: int = 30_000_000) -> dict:
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         # plain: both sides shuffle on user_id
-        t0 = time.perf_counter()
-        ev.join(dim, "user_id").write.format("noop").mode("overwrite").save()
-        plain_s = time.perf_counter() - t0
+        plain_s = measure("plain_join", lambda: ev.join(dim, "user_id"))["wall_s"]
 
         t0 = time.perf_counter()
         write_bucketed(ev, "tsf_bench_fact", ["user_id"], CPUS,
@@ -1071,9 +1060,7 @@ def run_bucketjoin(spark, n: int = 30_000_000) -> dict:
         joined = f.join(d, "user_id")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         no_exchange = "Exchange" not in plan
-        t0 = time.perf_counter()
-        joined.write.format("noop").mode("overwrite").save()
-        bucketed_s = time.perf_counter() - t0
+        bucketed_s = measure("bucketed_join", lambda: joined)["wall_s"]
         out = {
             "rows": n,
             "plain_join_s": round(plain_s, 2),
@@ -1116,9 +1103,7 @@ def run_skewjoin(spark, n: int = 30_000_000) -> dict:
     out = {"rows": n}
     try:
         def t(name, thunk):
-            t0 = time.perf_counter()
-            thunk().write.format("noop").mode("overwrite").save()
-            out[name] = round(time.perf_counter() - t0, 2)
+            out[name] = round(measure(name, thunk)["wall_s"], 2)
             print(f"#   {name}: {out[name]}s", file=sys.stderr)
 
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
@@ -1170,15 +1155,11 @@ def run_prune(spark, n: int = 30_000_000) -> dict:
         def agg(df):
             return df.groupBy("user_id").agg(F.sum("value").alias("s"))
 
-        t0 = time.perf_counter()
-        agg(back).write.format("noop").mode("overwrite").save()
-        full_s = time.perf_counter() - t0
+        full_s = measure("full_scan", lambda: agg(back))["wall_s"]
 
         pruned = back.filter(F.col("dt") == one_day)
         plan = pruned._jdf.queryExecution().executedPlan().toString()
-        t0 = time.perf_counter()
-        agg(pruned).write.format("noop").mode("overwrite").save()
-        pruned_s = time.perf_counter() - t0
+        pruned_s = measure("pruned_scan", lambda: agg(pruned))["wall_s"]
         out = {
             "rows": n,
             "partitions": n_parts,
@@ -1207,17 +1188,10 @@ def main():
             results.append(run_docs(n))
         print(json.dumps(results))
         return
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("tsf_scale_check")
-        .config("spark.sql.shuffle.partitions", str(CPUS * 4))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("tsf_scale_check", CPUS, **{
+        "spark.sql.shuffle.partitions": str(CPUS * 4),
+        "spark.driver.memory": "48g",
+    })
     if docs_one:
         name, n = args[1], int(args[2])
         print(run_docs_one(spark, name, n))

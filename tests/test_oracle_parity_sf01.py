@@ -9,27 +9,9 @@ import pytest
 
 import __spark_entry__ as entry_mod
 from tests.test_entry_oracle import TABLES, assert_parity
+from tools.harness import HEADLINE
 
 SF_DIR = "/root/testdata/sf0.1"
-
-HEADLINE = [
-    "fuse_merge",
-    "resample_1m_global",
-    "resample_keys_1h",
-    "forward_fill_global",
-    "sessionize_30m",
-    "tpch_q1_pricing",
-    "top_orders_per_priority",
-    "revenue_per_nation",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "text_stats",
-    "lang_id",
-    "doc_fingerprint",
-    "similarity_topk",
-    "embedding_neardup",
-]
 
 
 @pytest.fixture(scope="module")

@@ -14,7 +14,7 @@ from datetime import date, datetime, time, timedelta
 from zoneinfo import ZoneInfo
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -150,6 +150,36 @@ def test_resample_day_grid_vs_zoneinfo_oracle(
         want += [(k, ts, v) for ts, v in
                  _day_grid_oracle(events, days, tz, ffill, batch_end)]
     assert got == sorted(want, key=lambda r: (r[0] or "", r[1]))
+
+
+@given(
+    rows=_day_events,
+    start=st.sampled_from(_DST_DAYS),
+    days=st.sampled_from([2, 3]),
+    ffill=st.booleans(),
+    batch_end=st.booleans(),
+)
+@example(  # events at 05:00 UTC on epoch days 3, 4 and 6: labels 5 and 7
+    rows=[("a", 0, 18_000_000, 1), ("a", 1, 18_000_000, 2), ("a", 3, 18_000_000, 3)],
+    start=date(1970, 1, 4), days=2, ffill=True, batch_end=True,
+)
+@SETTINGS
+def test_handler_multi_day_grid_vs_zoneinfo_oracle(rows, start, days, ffill, batch_end):
+    """The row handler on 'Nd' grids without tz follows the same rules as
+    the vectorized day grid: anchored at the first event's UTC midnight."""
+    events = sorted(
+        (int(datetime.combine(start + timedelta(days=day), time(0), ZoneInfo("UTC"))
+             .timestamp() * 1000) + ms, seq, None if v is None else float(v))
+        for seq, (_k, day, ms, v) in enumerate(rows)
+    )
+    h = BatchEveryIntervalHandler(
+        f"{days}d", ffill_keys=["v"] if ffill else [], process_batch_end=batch_end
+    )
+    for ts, _seq, v in events:
+        h.process(ts, {"v": v})
+    h.finalize()
+    got = [(r["__timestamp"], r["v"]) for r in h.get_results()]
+    assert got == _day_grid_oracle(events, days, None, ffill, batch_end)
 
 
 pair_streams = st.tuples(

@@ -101,6 +101,30 @@ def test_stream_2d_midnight_anchor_without_tz(spark, tmp_path):
     assert got == want
 
 
+def test_stream_2d_labels_each_event_from_its_own_midnight(spark, tmp_path):
+    """Across days the stream has no grid anchor: each event's label is
+    its own midnight + 2 days, where batch anchors at the first date."""
+    day, h5 = 86_400_000, 5 * 3_600_000
+    rows = [Row(__timestamp=d * day + h5, v=str(d)) for d in (3, 4, 6)]
+    schema = "__timestamp bigint, v string"
+    got = sorted(
+        (r["__timestamp"] // day, r["v"])
+        for r in _run_stream(
+            spark, tmp_path, rows, schema,
+            interval="2d", value_cols=["v"], tiebreak_cols=[],
+        )
+    )
+    assert got == [(5, "3"), (6, "4"), (8, "6")]
+    batch = sorted(
+        (r["__timestamp"] // day, r["v"])
+        for r in resample_last_interval(
+            spark.createDataFrame(rows, schema), "2d",
+            value_cols=["v"], tiebreak_cols=[], gap_fill=False,
+        ).collect()
+    )
+    assert batch == [(5, "4"), (7, "6")]
+
+
 def test_stream_1d_utc_fast_path_unchanged(spark, tmp_path):
     """'1d' without tz stays on the epoch-anchored window() fast path:
     the trailing bucket is HELD in state (append emits a window only when

@@ -33,10 +33,7 @@ from timeseriesfuser_spark.replay import (
 )
 from timeseriesfuser_spark.sinks import write_batched
 from timeseriesfuser_spark.ops.util import cache_scope
-
-TS_COL = "__timestamp"
-SRC_ID_COL = "__src_id"
-SEQ_COL = "__seq"
+from timeseriesfuser_spark.sources.readers import TS_COL, SRC_ID_COL, SEQ_COL
 
 __all__ = [
     "SourceConfig",

@@ -980,10 +980,10 @@ def _streaming_sessionize_30m_impl(
 
 @register(
     "streaming_resample_2d",
-    # Midnight-anchored 'Nd' day-grid streaming resample (the batch T2
-    # 'Nd'/tz semantics' streaming twin): per event the label is the
-    # next 2-day midnight-anchored boundary — for UTC exactly
-    # (t DIV 86400000 + 2) * 86400000. The day path groups on the
+    # 'Nd' day-label streaming resample: per event the label is its own
+    # midnight plus 2 days — for UTC exactly (t DIV 86400000 + 2) *
+    # 86400000; unlike the batch resampler there is no per-key grid
+    # anchor (resample_stream docstring). The day path groups on the
     # watermarked LABEL column, so EVERY label emits (the grouping key
     # IS the bucket end) — no trailing-bucket exclusion, unlike
     # streaming_resample_1h's window() path.
@@ -1002,15 +1002,15 @@ def _streaming_sessionize_30m_impl(
 )
 def q_streaming_resample_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming day-grid resample through the driver harness
-    (streaming.resample_stream day path, VERDICT r9 item #8): 'Nd'
-    intervals anchor at each event's (local) midnight — reference
-    classes.py:787-795 — which F.window's fixed startTime cannot
-    express, so the day path aggregates on the watermarked DST-correct
-    boundary-label column (intervals.day_boundary_label_col). The tz
-    variant is pinned against the batch resampler across a DST
-    transition in tests/test_resample_stream_day_tz.py (DuckDB-side tz
-    math would need the ICU extension, so the driver oracle runs the
-    UTC grid)."""
+    (streaming.resample_stream day path, VERDICT r9 item #8): each
+    event's 'Nd' label is its own (local) midnight plus N days, with no
+    per-key anchor, so for N > 1 it differs from the batch resampler's
+    first-date anchor. F.window's fixed startTime cannot express local
+    midnights, so the day path aggregates on the watermarked DST-correct
+    boundary-label column (intervals.day_boundary_label_col). Both rules
+    and the tz variant across a DST transition are pinned in
+    tests/test_resample_stream_day_tz.py (DuckDB-side tz math would need
+    the ICU extension, so the driver oracle runs the UTC grid)."""
     from timeseriesfuser_spark.contract._base import (
         _run_availablenow_to_memory,
     )

@@ -11,7 +11,9 @@ interval stream delivered row by row.
 
 Semantics (verified against the reference's own interval tests):
 - first event initializes the next boundary = smallest grid point strictly
-  greater than its ts (classes.py:666-688);
+  greater than its ts (classes.py:666-688); 'Nd' grids with N > 1 start
+  at that event's midnight (UTC without ``tz``) plus N days, as in the
+  vectorized operator;
 - an event at/past the boundary flushes the previous event's values
   stamped at the boundary; further empty boundaries up to the event's own
   boundary emit blanks where only ``ffill_keys`` carry the previous
@@ -28,10 +30,9 @@ from __future__ import annotations
 
 from typing import Any, Dict, List, Optional, Sequence
 
-from timeseriesfuser_spark.intervals import interval_to_ms, next_boundary_ms
+from timeseriesfuser_spark.intervals import MS_PER_DAY, interval_to_ms, next_boundary_ms
 from timeseriesfuser_spark.replay import BaseHandler
-
-TS_COL = "__timestamp"
+from timeseriesfuser_spark.sources.readers import TS_COL
 
 
 class BatchEveryIntervalHandler(BaseHandler):
@@ -47,6 +48,9 @@ class BatchEveryIntervalHandler(BaseHandler):
     ) -> None:
         self.step = interval_to_ms(batch_interval)
         self.interval = batch_interval
+        # next_boundary_ms(tz=None) floors 'Nd' on the epoch-anchored grid
+        if tz is None and batch_interval.strip().endswith("d") and self.step > MS_PER_DAY:
+            tz = "UTC"
         self.tz = tz
         self.ffill_keys = list(ffill_keys)
         self.process_batch_end = process_batch_end

@@ -97,7 +97,6 @@ def resample_last_interval(
     process_batch_end: bool = True,
     gap_fill: bool = True,
     offset_ms: int = 0,
-    num_partitions: Optional[int] = None,
     tz: Optional[str] = None,
 ) -> DataFrame:
     """Resample to a fixed grid; output has ``ts_col`` = boundary label,
@@ -107,10 +106,6 @@ def resample_last_interval(
     ``tz``: for day intervals only — boundaries are local midnights in that
     timezone, DST-correct (reference classes.py:787-795), instead of fixed
     24h UTC steps.
-
-    ``num_partitions``: scan buckets of the ungrouped epoch-grid gap fill
-    (default ``spark.sql.shuffle.partitions``). That path persists its
-    buckets relation once; release it with ``ops.util.cache_scope()``.
     """
     iv = interval.strip()
     if tz is not None:
@@ -197,9 +192,7 @@ def resample_last_interval(
         )
     else:
         buckets = track_persist(buckets.persist(StorageLevel.MEMORY_AND_DISK))
-        n = num_partitions or int(
-            buckets.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
+        n = int(buckets.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
         b1 = F.broadcast(
             buckets.agg(F.min(_BUCKET).alias("__bmin"), F.max(_BUCKET).alias("__bmax"))
         )

@@ -157,10 +157,13 @@ def resample_stream(
     rows in the prior bucket. Size the delay as (interval step + the
     intended event-time lateness, e.g. from ``lateness_stats``) on this
     path; the window() fast path measures the same argument in
-    event-time space. As in batch, ``'Nd'``
-    with N > 1 routes through the midnight-anchored path even without
-    ``tz`` (reference parity); ``'1d'`` without ``tz`` stays on the
-    epoch-anchored fast path (grid-identical). Emission asymmetry,
+    event-time space. ``'Nd'`` with N > 1 takes the label path even
+    without ``tz`` (then in UTC), and there each event's label is its OWN
+    local midnight plus N days: the grid has no per-key anchor, unlike
+    batch ``resample_last_interval``, which anchors at the key's first
+    local date. Events on days 3, 4 and 6 with ``'2d'`` get labels 5, 6
+    and 8 here and 5 and 7 in batch; the two agree for ``'1d'``, which
+    without ``tz`` stays on the epoch-anchored fast path. Emission asymmetry,
     pinned in ``tests/test_resample_stream_day_tz.py``: the window()
     fast path HOLDS the trailing bucket until the watermark passes
     ``window.end``, while on the day path the grouping key IS the

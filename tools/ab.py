@@ -15,12 +15,10 @@ discipline SCALE.md's perf claims are built on, as one command:
   warm-up for everyone; it is run and thrown away.
 - **Min-of-k per arm.** Wall-clock minimum over the measured rounds —
   the standard noise floor estimator for local runs.
-- **Same-session machine-speed control.** The bench.py control workload
-  (fixed synthetic: 20M range → md5 → groupBy agg → noop), measured in
-  the SAME session; cross-session comparisons divide by it
-  (`normalized` field). The same query set has measured 1.5-2.1× apart
-  on one machine on one day — a delta smaller than the control delta is
-  environment, not plan.
+- **Same-session machine-speed control.** `tools.harness.control_workload`
+  (bench.py's), measured in the SAME session; cross-session comparisons
+  divide by it (`normalized` field) — a delta smaller than the control
+  delta is environment, not plan.
 - **Cache hygiene.** Each arm invocation runs inside `cache_scope()`
   (operator-internal persists released) and is followed by
   `spark.catalog.clearCache()`, so no arm serves another's cache.
@@ -43,31 +41,15 @@ from __future__ import annotations
 import argparse
 import importlib
 import json
+import os
+import statistics
 import sys
 import time
 from typing import Callable, Dict, Optional
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-def control_workload(spark) -> float:
-    """One iteration of the bench.py machine-speed control; seconds."""
-    from pyspark.sql import functions as F
-
-    t0 = time.perf_counter()
-    (
-        spark.range(20_000_000)
-        .select(
-            (F.col("id") % 997).alias("k"),
-            F.md5(F.col("id").cast("string")).alias("h"),
-        )
-        .groupBy("k")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("h").alias("mn"),
-            F.max("h").alias("mx"),
-        )
-        .write.format("noop").mode("overwrite").save()
-    )
-    return time.perf_counter() - t0
+from tools.harness import control_workload, session  # noqa: E402
 
 
 def _run_arm(spark, fn: Callable) -> float:
@@ -113,17 +95,12 @@ def interleaved_ab(
             t = _run_arm(spark, arms[n])
             if rnd >= warmup:
                 times[n].append(t)
-    control = min(control_workload(spark) for _ in range(control_rounds))
-
-    def _med(xs):
-        s = sorted(xs)
-        m = len(s) // 2
-        return s[m] if len(s) % 2 else (s[m - 1] + s[m]) / 2
+    control = control_workload(spark, control_rounds)
 
     out = {
         "rounds": rounds,
         "warmup": warmup,
-        "control_sec": round(control, 3),
+        "control_sec": None if control is None else round(control, 3),
         "arms": {},
     }
     for n in names:
@@ -131,7 +108,7 @@ def interleaved_ab(
         out["arms"][n] = {
             "times": [round(t, 3) for t in times[n]],
             "min": round(mn, 3),
-            "median": round(_med(times[n]), 3),
+            "median": round(statistics.median(times[n]), 3),
             "normalized": round(mn / control, 3) if control else None,
         }
     if len(names) == 2:
@@ -163,17 +140,7 @@ def main(argv: Optional[list] = None) -> None:
     ap.add_argument("--driver-mem", default="16g")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", args.driver_mem)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("ab", args.cpus, **{"spark.driver.memory": args.driver_mem})
     arms = {}
     for a in args.arm:
         name, _, spec = a.partition("=")

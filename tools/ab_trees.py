@@ -31,6 +31,12 @@ import os
 import sys
 from typing import Dict
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# tools/ab.py only needs the harness + cache_scope (same in both trees);
+# it comes from this tree.
+from tools.ab import interleaved_ab  # noqa: E402
+from tools.harness import session  # noqa: E402
 
 _PKG = "timeseriesfuser_spark"
 
@@ -89,22 +95,7 @@ def main(argv=None):
     ap.add_argument("--driver-mem", default="16g")
     args = ap.parse_args(argv)
 
-    # tools/ab.py only needs stdlib + cache_scope (same in both trees);
-    # import it from tree_b (current HEAD).
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__)))
-    from ab import interleaved_ab  # noqa: E402
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", args.driver_mem)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("ab_trees", args.cpus, **{"spark.driver.memory": args.driver_mem})
 
     tree_a = TreeLoader(args.tree_a, "_a")
     tree_b = TreeLoader(args.tree_b, "_b")

@@ -31,21 +31,9 @@ import os
 import shutil
 import sys
 import tempfile
-import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _du(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
 
 
 def main():
@@ -79,28 +67,19 @@ def main():
     giants = [int(x) for x in args.giants.split(",") if x]
     scratch = tempfile.mkdtemp(prefix="cc_cell_scratch_")
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    builder = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.driver.memory", args.driver_mem)
-        .config("spark.local.dir", scratch)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-    )
+    from tools.harness import sample_disk_peak, session
+
     if args.event_log_dir:
         os.makedirs(args.event_log_dir, exist_ok=True)
-        builder = builder.config("spark.eventLog.enabled", "true").config(
-            "spark.eventLog.dir", args.event_log_dir
-        )
-    if args.driver_java_opts:
-        builder = builder.config(
-            "spark.driver.extraJavaOptions", args.driver_java_opts
-        )
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("cc_cell", args.cpus, **{
+        "spark.driver.memory": args.driver_mem,
+        "spark.local.dir": scratch,
+        "spark.eventLog.enabled": "true" if args.event_log_dir else None,
+        "spark.eventLog.dir": args.event_log_dir,
+        "spark.driver.extraJavaOptions": args.driver_java_opts,
+    })
     from timeseriesfuser_spark.ops.dedup import connected_components
 
     # --- plant: contiguous-range path components
@@ -142,16 +121,7 @@ def main():
     for e in edge_dfs[1:]:
         edges = edges.unionByName(e)
 
-    peak = {"bytes": 0}
-    stop = threading.Event()
-
-    def sampler():
-        while not stop.is_set():
-            peak["bytes"] = max(peak["bytes"], _du(scratch))
-            time.sleep(2.0)
-
-    th = threading.Thread(target=sampler, daemon=True)
-    th.start()
+    stop_sampler = sample_disk_peak(scratch)
 
     # pre-seeding round1_plan opts in to the plan-capture diagnostic
     stats: dict = {"round1_plan": None} if args.plan_out else {}
@@ -165,9 +135,7 @@ def main():
         F.sum("cluster_id").alias("s"),
     ).collect()[0]
     wall = time.perf_counter() - t0
-    stop.set()
-    th.join(timeout=5)
-    peak["bytes"] = max(peak["bytes"], _du(scratch))
+    peak_bytes = stop_sampler()
 
     if args.plan_out and stats.get("round1_plan"):
         with open(args.plan_out, "w") as f:
@@ -196,7 +164,7 @@ def main():
         "sum_cluster_id": int(row["s"]),
         "sum_cluster_id_expected": sum_cluster,
         "exact": ok,
-        "peak_scratch_bytes": peak["bytes"],
+        "peak_scratch_bytes": peak_bytes,
         "driver_mem": args.driver_mem,
     }))
     spark.stop()

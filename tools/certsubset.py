@@ -15,11 +15,10 @@ import os
 import sys
 import time
 
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, HERE)
-sys.path.insert(0, os.path.join(HERE, "tools"))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from localcert import TABLES, _compare  # noqa: E402
+from tools.harness import session  # noqa: E402
+from tools.localcert import CERT_CONF, TABLES, _compare  # noqa: E402
 
 
 def main() -> int:
@@ -30,25 +29,10 @@ def main() -> int:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
 
     import duckdb
-    from pyspark.sql import SparkSession
 
     from timeseriesfuser_spark import contract
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .appName("certsubset")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("certsubset", **CERT_CONF)
     con = duckdb.connect()
     for t in TABLES:
         con.sql(

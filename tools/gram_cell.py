@@ -28,8 +28,7 @@ import os
 import sys
 import time
 
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
@@ -42,20 +41,11 @@ def main() -> int:
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("gram_cell")
-        .config("spark.sql.shuffle.partitions", str(args.cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from tools.harness import session
+
+    spark = session("gram_cell", args.cpus)
 
     path = os.path.join(args.sf_tmp, f"emb_{args.vectors}x{args.dims}.parquet")
     if not os.path.exists(path):

@@ -33,23 +33,11 @@ import os
 import shutil
 import sys
 import tempfile
-import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 PPM = 1_000_000
-
-
-def _du(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
 
 
 def simulate_star(leaves: int, iterations: int, damping_ppm: int):
@@ -90,19 +78,13 @@ def main():
     cycles = [int(x) for x in args.cycles.split(",") if x]
     scratch = tempfile.mkdtemp(prefix="graph_cell_scratch_")
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.driver.memory", args.driver_mem)
-        .config("spark.local.dir", scratch)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from tools.harness import sample_disk_peak, session
+
+    spark = session("graph_cell", args.cpus, **{
+        "spark.driver.memory": args.driver_mem, "spark.local.dir": scratch,
+    })
     from timeseriesfuser_spark.ops import graph as G
 
     # --- plant: stars then cycles over contiguous id ranges
@@ -139,16 +121,7 @@ def main():
     n_nodes = sum(l + 1 for l in stars) + sum(cycles)
     n_edges = sum(stars) + sum(cycles)
 
-    peak = {"bytes": 0}
-    stop = threading.Event()
-
-    def sampler():
-        while not stop.is_set():
-            peak["bytes"] = max(peak["bytes"], _du(scratch))
-            time.sleep(2.0)
-
-    th = threading.Thread(target=sampler, daemon=True)
-    th.start()
+    stop_sampler = sample_disk_peak(scratch)
 
     stats: dict = {"round1_plan": None} if args.plan_out else {}
     t0 = time.perf_counter()
@@ -206,9 +179,7 @@ def main():
             "sum_hops": int(row["s"]),
             "sum_hops_expected": exp_sum,
         }
-    stop.set()
-    th.join(timeout=5)
-    peak["bytes"] = max(peak["bytes"], _du(scratch))
+    peak_bytes = stop_sampler()
 
     if args.plan_out and stats.get("round1_plan"):
         with open(args.plan_out, "w") as f:
@@ -226,7 +197,7 @@ def main():
         "cycles": cycles,
         "wall_sec": round(wall, 1),
         "exact": ok,
-        "peak_scratch_bytes": peak["bytes"],
+        "peak_scratch_bytes": peak_bytes,
         "driver_mem": args.driver_mem,
         **extra,
     }))

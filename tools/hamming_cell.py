@@ -29,18 +29,11 @@ def main():
     ap.add_argument("--cpus", default="32")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.driver.memory", args.driver_mem)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from tools.harness import session
+
+    spark = session("hamming_cell", args.cpus, **{"spark.driver.memory": args.driver_mem})
     from timeseriesfuser_spark.ops.dedup import hamming_pairs
 
     base = spark.range(args.n).select(

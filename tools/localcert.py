@@ -34,10 +34,18 @@ import time
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
+from tools.harness import session  # noqa: E402
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
+# Spark settings of the oracle checks (also tools/certsubset.py).
+CERT_CONF = {
+    "spark.sql.shuffle.partitions": "32",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
 
 
 def _values_equal(a, b) -> bool:
@@ -81,25 +89,10 @@ def main() -> int:
     out_path = os.path.join(HERE, f"LOCALCERT_r{rnd:02d}.json")
 
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .appName("localcert")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("localcert", **CERT_CONF)
     con = duckdb.connect()
     for t in TABLES:
         con.sql(

@@ -19,10 +19,14 @@ Key plan (offset = copy_index * 10^9, far above any real key):
 
 from __future__ import annotations
 
+import os
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.harness import session  # noqa: E402
 
 OFF = 10**9
 
@@ -43,17 +47,11 @@ def assert_keys_below_offset(df, keys, table, off=OFF) -> None:
 
 def main() -> None:
     src, dst, n = sys.argv[1], sys.argv[2], int(sys.argv[3])
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("tsf_make_scaled_sf")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", "32g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("tsf_make_scaled_sf", 32, **{
+        "spark.sql.shuffle.partitions": "64",
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.driver.memory": "32g",
+    })
 
     offsets = {
         "events": ["event_id", "user_id"],

@@ -41,18 +41,11 @@ def main():
         mb = int(mb)
     cache = args.cache.lower() == "true"
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.driver.memory", args.driver_mem)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from tools.harness import session
+
+    spark = session("oom_cell", args.cpus, **{"spark.driver.memory": args.driver_mem})
 
     # 5 unique words per doc (disjoint across docs) — the
     # test_cap_ladder_scale corpus shape at scale. --plant N adds N

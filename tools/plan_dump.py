@@ -13,8 +13,7 @@ from __future__ import annotations
 import os
 import sys
 
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
@@ -22,21 +21,16 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(out_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
-
     from timeseriesfuser_spark import contract
+    from tools.harness import session
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # Spark's default driver heap: broadcast statistics and the dedup cache
+    # budget read it, so the plans would change with it.
+    spark = session("plan_dump", **{
+        "spark.sql.shuffle.partitions": "32",
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.driver.memory": None,
+    })
 
     rc = 0
     for name in names:

@@ -5,8 +5,8 @@ For each non-streaming query: build the plan at the given SF dir, capture
 ``explain('formatted')``, and grep for the §1.3 red flags — Python
 evaluation nodes (BatchEvalPython/ArrowEvalPython — MapInArrow/MapInPandas
 are reported separately since the Arrow kernels and decode paths are
-deliberate), CartesianProduct, single-partition windows, scans whose
-ReadSchema is the whole table with no pushed filters, and exchange counts.
+deliberate), CartesianProduct, broadcast nested-loop joins, single-partition
+exchanges, and exchange counts.
 Also records plan-construction wall time (driver latency).
 
 Usage: python tools/plan_sweep.py [SF_DIR] [--json OUT]
@@ -16,12 +16,10 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 import time
 
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
@@ -30,20 +28,13 @@ def main() -> int:
     if "--json" in sys.argv:
         out_path = sys.argv[sys.argv.index("--json") + 1]
 
-    from pyspark.sql import SparkSession
-
     from timeseriesfuser_spark import contract
+    from tools.harness import session
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # Spark's default driver heap, as in tools/plan_dump.py.
+    spark = session("plan_sweep", **{
+        "spark.sql.shuffle.partitions": "32", "spark.driver.memory": None,
+    })
 
     report = {}
     for name, fn in sorted(contract.QUERIES.items()):
@@ -69,17 +60,11 @@ def main() -> int:
             flags.append("CartesianProduct")
         if "BroadcastNestedLoopJoin" in plan:
             flags.append("BroadcastNestedLoopJoin")
-        if re.search(r"Window.*\n.*Sort", plan) and "SinglePartition" in plan:
-            # cheap proxy; refined below
-            pass
         # single-partition exchange feeding a Window/Sort
         if "Exchange SinglePartition" in plan:
             flags.append("ExchangeSinglePartition")
         n_exchange = plan.count("Exchange ")
         n_arrow = plan.count("MapInArrow") + plan.count("MapInPandas")
-        scans = re.findall(
-            r"Scan parquet[^\n]*\n(?:.*\n)*?.*?ReadSchema: ([^\n]*)", plan
-        )
         report[name] = {
             "construct_s": construct_s,
             "flags": flags,

@@ -18,16 +18,10 @@ import json
 import os
 import re
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
 #: re-certified every round by test_headline_parity_sf01
-HEADLINE_ALWAYS = [
-    "fuse_merge", "resample_1m_global", "resample_keys_1h",
-    "forward_fill_global", "sessionize_30m", "tpch_q1_pricing",
-    "top_orders_per_priority", "revenue_per_nation", "dedup_exact",
-    "dedup_minhash_lsh", "dedup_simhash", "text_stats", "lang_id",
-    "doc_fingerprint", "similarity_topk", "embedding_neardup",
-]
+from tools.harness import HEADLINE
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def history(root: str = REPO) -> dict:
@@ -101,7 +95,7 @@ def rotation(k: int = 50, root: str = REPO) -> list:
         sys.path.insert(0, root)
     import __spark_entry__ as entry_mod
 
-    names = sorted(set(entry_mod.queries()) - set(HEADLINE_ALWAYS))
+    names = sorted(set(entry_mod.queries()) - set(HEADLINE))
     hist = history(root)
     names.sort(key=lambda q: (hist.get(q, -1), q))
     return names[: int(k)]

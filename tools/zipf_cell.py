@@ -57,18 +57,11 @@ def main():
     args = ap.parse_args()
     tn, td = (int(x) for x in args.threshold.split(","))
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from tools.harness import session
+
+    spark = session("zipf_cell", args.cpus, **{"spark.driver.memory": "48g"})
     path = build_corpus(spark, args.docs, args.k, args.vocab, args.alpha)
     docs = spark.read.parquet(path)
 
