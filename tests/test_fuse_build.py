@@ -1,6 +1,8 @@
 """The fuser resolves its window and source frames once, and forward-fills
 a small file-backed stream in one window (no quantile sketch); larger or
-DataFrame-backed streams keep the range-bucketed scan."""
+DataFrame-backed streams keep the range-bucketed scan. An ungrouped
+resample of the filled stream fills at interval grain; any other consumer
+reads the event-level fill."""
 
 import glob
 import gzip
@@ -11,9 +13,11 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from tests.test_resample import _jobs
 from timeseriesfuser_spark import SourceConfig, TimeSeriesFuser
 from timeseriesfuser_spark.operators import fuse
 from timeseriesfuser_spark.operators.fill import forward_fill
+from timeseriesfuser_spark.operators.resample import resample_last_interval
 from timeseriesfuser_spark.ops import util as ops_util
 from timeseriesfuser_spark.sources.readers import INTERNAL_COLS, TS_COL
 
@@ -152,3 +156,68 @@ def test_estimated_input_bytes_decodes_escaped_paths(spark, tmp_path):
     df = spark.read.parquet(str(root / "p"))
     assert all("%20" in f for f in df.inputFiles())
     assert ops_util.estimated_input_bytes(df) == sum(os.path.getsize(f) for f in files) > 0
+
+
+def _event_windows(df):
+    """(windows over event rows, windows over per-interval aggregates) in
+    the analyzed plan, where persisted relations still show their plans: a
+    window reads event rows when a file scan is reachable below it without
+    passing an Aggregate."""
+    counts = [0, 0]
+
+    def kids(node):
+        ch = node.children()
+        return [ch.apply(i) for i in range(ch.size())]
+
+    def name(node):
+        return node.getClass().getSimpleName()
+
+    def reaches_scan(node):
+        if name(node) == "Aggregate":
+            return False
+        return name(node) == "LogicalRelation" or any(reaches_scan(k) for k in kids(node))
+
+    def walk(node):
+        if name(node) == "Window":
+            counts[0 if reaches_scan(kids(node)[0]) else 1] += 1
+        for k in kids(node):
+            walk(k)
+
+    walk(df._jdf.queryExecution().analyzed())
+    return tuple(counts)
+
+
+@pytest.mark.parametrize("small", [True, False])
+def test_interval_fill_reads_no_event_rows_in_a_window(spark, two_sources, monkeypatch, small):
+    if not small:
+        monkeypatch.setattr(ops_util, "SMALL_INPUT_BYTES", 0)
+    fuser = TimeSeriesFuser(two_sources, forward_fill=True)
+    keys = fuser.remap_keys(spark, ["Price", "bid"])
+    filled = fuser.fused(spark)
+    with ops_util.cache_scope():
+        built = []
+        assert _jobs(spark, lambda: built.append(
+            resample_last_interval(filled, "7s", ffill_keys=keys)
+        )) == 0
+        out = built[0]
+        # one window over the aggregate: the carry window (small) or the
+        # scan's within-bucket window (large)
+        assert _event_windows(out) == (0, 1)
+        want = resample_last_interval(filled.select("*"), "7s", ffill_keys=keys)
+        assert _event_windows(want)[0] > 0
+        assert out.orderBy(TS_COL).collect() == want.orderBy(TS_COL).collect()
+
+
+@pytest.mark.parametrize("case", ["secondary", "no_internal", "keyed", "filter"])
+def test_interval_fill_falls_back_to_event_fill(spark, two_sources, case):
+    opts = {
+        "secondary": {"secondary_sort_col": "Syn_id"},
+        "no_internal": {"remove_internal_cols": True},
+    }.get(case, {})
+    fuser = TimeSeriesFuser(two_sources, forward_fill=True, **opts)
+    filled = fuser.fused(spark)
+    if case == "filter":
+        filled = filled.filter(F.col(TS_COL) > T0)
+    keys = ["Syn_id||trades"] if case == "keyed" else []
+    out = resample_last_interval(filled, "7s", keys=keys)
+    assert _event_windows(out)[0] > 0

@@ -5,7 +5,9 @@ across independent implementations of the same semantics —
 - day-grid resample (local-midnight grids, DST): the plan vs a zoneinfo
   oracle of the module docstring's rules;
 - forward fill: the two-pass range-bucketed scheme vs a naive
-  single-partition window.
+  single-partition window;
+- fused stream → ungrouped resample: the interval-grain fill vs the
+  event-level fill of the same stream.
 
 Each pair is implemented independently, so agreement on random inputs is
 strong evidence for both."""
@@ -20,9 +22,11 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from timeseriesfuser_spark import SourceConfig, TimeSeriesFuser
 from timeseriesfuser_spark.handlers import BatchEveryIntervalHandler
 from timeseriesfuser_spark.operators.fill import forward_fill
-from timeseriesfuser_spark.operators.resample import resample_last_interval
+from timeseriesfuser_spark.operators.resample import _SPINE_CHUNK, resample_last_interval
+from timeseriesfuser_spark.ops import util as ops_util
 from timeseriesfuser_spark.replay import replay
 
 # distinct, sorted-agnostic small timestamp lists; values 0..999
@@ -244,6 +248,55 @@ def test_forward_fill_vs_naive_window(spark, rows, nulls):
         ).collect()
     }
     assert got == want
+
+
+# Two parquet sources sharing a colliding ``Syn_id``; timestamps from a
+# narrow range so they tie across sources; null timestamps and values.
+_fused_rows = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.integers(0, 60)), st.one_of(st.none(), st.integers(0, 999))
+    ),
+    min_size=1, max_size=12,
+)
+
+
+@given(
+    a=_fused_rows, b=_fused_rows, ffill=st.booleans(), batch_end=st.booleans(),
+    long_gap=st.booleans(), small=st.booleans(),
+)
+@SETTINGS
+def test_interval_fill_vs_event_fill(
+    spark, tmp_path_factory, monkeypatch, a, b, ffill, batch_end, long_gap, small
+):
+    import pandas as pd
+
+    t0, step = 1_700_000_000_000, 7
+    if long_gap:  # a gap of more than _SPINE_CHUNK labels
+        a = [*a, (60 + step * (_SPINE_CHUNK + 50), 1)]
+    root = tmp_path_factory.mktemp("fused")
+    sources = []
+    for name, col, rows in (("trades", "Price", a), ("spread", "bid", b)):
+        (root / name).mkdir()
+        pd.DataFrame({
+            "Timestamp": pd.array([None if t is None else t0 + t for t, _ in rows], dtype="Int64"),
+            col: [None if v is None else float(v) for _, v in rows],
+            "Syn_id": pd.array([v for _, v in rows], dtype="Int64"),
+        }).to_parquet(root / name / f"{name}-0.parquet")
+        sources.append(SourceConfig(name=name, path=str(root / name), fmt="parquet"))
+    monkeypatch.setattr(ops_util, "SMALL_INPUT_BYTES", (64 << 20) if small else 0)
+
+    fuser = TimeSeriesFuser(sources, forward_fill=True, derive_window=False)
+    keys = fuser.remap_keys(spark, ["Price", "bid", "Syn_id"]) if ffill else []
+    filled = fuser.fused(spark)
+    with ops_util.cache_scope():
+        got, want = (
+            resample_last_interval(
+                df, f"{step}l", ffill_keys=keys, process_batch_end=batch_end
+            )
+            for df in (filled, filled.select("*"))
+        )
+        assert got.schema == want.schema
+        assert got.orderBy("__timestamp").collect() == want.orderBy("__timestamp").collect()
 
 
 # --------------------------------------------------------------------------- #

@@ -32,13 +32,19 @@ parallelism they buy. The rule lives here rather than in the shared
 scan because the pre-fill plan is raw file scans, a union and a filter,
 so on-disk bytes bound its rows; a generic scan input may be an explode
 or a join, whose size the files do not bound.
+
+The filled stream carries a private ``FillRecord`` as a plain
+attribute, from which an ungrouped resample reading the stream directly
+fills at interval grain instead (``operators.resample``, "Interval-grain
+fill"). Any transform returns a new DataFrame without the attribute, so
+every other consumer reads the event-level fill.
 """
 
 from __future__ import annotations
 
 from collections import Counter
 from functools import reduce
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Dict, List, NamedTuple, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,6 +61,15 @@ from timeseriesfuser_spark.sources.readers import (
     probe_source_window,
 )
 from timeseriesfuser_spark.timeutils import coerce_to_epoch_ms
+
+
+class FillRecord(NamedTuple):
+    """What ``fused()`` attaches to its forward-filled stream."""
+
+    stream: DataFrame  # the stream before the fill
+    cols: List[str]  # the filled columns
+    order: List[str]  # the fill order
+    small: bool  # filled in one window (SMALL_INPUT_BYTES rule)
 
 
 def compute_collision_renames(
@@ -291,9 +306,13 @@ class TimeSeriesFuser:
                 else None
             )
             small = est is not None and est < ops_util.SMALL_INPUT_BYTES
-            merged = forward_fill(
+            filled = forward_fill(
                 merged, self.sort_cols(), fill_cols, num_partitions=1 if small else None
             )
+            # Read by resample_last_interval (module docstring); any
+            # transform of ``filled`` returns a new object without it.
+            filled._fill_record = FillRecord(merged, fill_cols, self.sort_cols(), small)
+            merged = filled
 
         if sort:
             merged = merged.orderBy(*[F.col(c) for c in order_cols])

@@ -64,6 +64,27 @@ an enclosing ``ops.util.cache_scope()`` exits. Labels come from a
 two-level sequence/explode (at most ``_SPINE_CHUNK`` labels per array); a
 single long gap is generated by the task that holds its bucket row. No
 single-task stage proportional to data size.
+
+Interval-grain fill. ``TimeSeriesFuser.fused()`` attaches a private
+record to its forward-filled stream: the stream before the fill, the
+filled columns, the fill order and whether it filled in one window.
+Any transform in between returns a new DataFrame without it. When the
+record is there, the resample is ungrouped on an epoch grid with
+``gap_fill``, the fill order is ``[ts_col, *tiebreak_cols]`` (no
+``secondary_sort_col``, internal columns kept) and no order column is
+itself filled, and every value column was filled, the fill runs after
+the aggregate, over interval rows instead of events. It is exact: after
+a global LOCF fill, an interval's last event holds, per column, the last
+non-null value up to it -- the interval's own last non-null value
+(``max_by(c, when(c is not null, order))``), or else the previous
+interval's filled value (Yan & Larson's eager aggregation, VLDB 1995).
+The carry is one window over the interval rows when the fuser filled in
+one window; otherwise one ascending exclusive bucketed scan over the
+persisted aggregate, giving each interval the previous label and the
+previous interval's filled row (see :func:`_interval_carry`). Both feed
+the same label expansion. Replay, ``fused(sort=True)``, keyed resamples,
+day/tz grids and ``secondary_sort_col`` streams resample the event-level
+fill as before.
 """
 
 from __future__ import annotations
@@ -139,6 +160,15 @@ def resample_last_interval(
     day_grid = iv.endswith("d") and offset_ms == 0 and (
         tz is not None or int(iv[:-1]) > 1
     )
+    # The fuser's filled stream under an ungrouped epoch gap fill in the
+    # fill's own order: fill at interval grain (module docstring).
+    rec = vars(df).get("_fill_record")
+    interval_fill = bool(
+        rec is not None and gap_fill and not keys and not day_grid and value_cols
+        and rec.order == [ts_col, *tiebreak_cols]
+        and not set(rec.order) & set(rec.cols)
+        and set(value_cols) <= set(rec.cols)
+    )
     if day_grid:
         # Local dates come from Spark's tz database, as does label_ts, so
         # Python-side zoneinfo math never has to bit-match it. The daily
@@ -160,12 +190,20 @@ def resample_last_interval(
             return F.unix_millis(F.to_utc_timestamp(local_midnight, tz))
     else:
         step = interval_to_ms(interval)
-        src = df.withColumn(_BUCKET, boundary_label_col(ts, step, offset_ms))
+        src = (rec.stream if interval_fill else df).withColumn(
+            _BUCKET, boundary_label_col(ts, step, offset_ms)
+        )
 
         def label_ts(label: Column) -> Column:
             return label
 
-    buckets = src.groupBy(*keys, _BUCKET).agg(F.max_by(row, order).alias(_ROW))
+    if interval_fill:  # each column's last non-null value, filled below
+        aggs = [
+            F.max_by(c, F.when(F.col(c).isNotNull(), order)).alias(c) for c in value_cols
+        ]
+    else:
+        aggs = [F.max_by(row, order).alias(_ROW)]
+    buckets = src.groupBy(*keys, _BUCKET).agg(*aggs)
     bucket = F.col(_BUCKET)
     if not gap_fill:
         return buckets.select(
@@ -177,32 +215,20 @@ def resample_last_interval(
     # Gap fill (module docstring): the next label is a lead window keyed,
     # and on day grids, whose relation is one row per label, ungrouped
     # too. Ungrouped epoch grids can hold millions of labels, so there it
-    # is a strictly-before min scan in descending label order, with an
-    # equal-width in-plan bucket id over the broadcast 1-row [min, max]
-    # label: no construction job, and each scan bucket holds at most
-    # width/step rows whatever the data's skew. That scan reads the
-    # buckets three times (bounds, scan, scan seeds), so it persists them
-    # lazily — not a localCheckpoint: on a dense grid the relation
-    # approaches input size, and checkpoint blocks always hit
-    # disk-backed storage (83 s vs 22 s at 30M rows).
-    buckets = buckets.filter(bucket.isNotNull())
-    if keys or day_grid:
+    # is a strictly-before min scan in descending label order
+    # (_epoch_scan). The interval-grain fill carries the columns in the
+    # same pass.
+    if interval_fill:
+        rel = _interval_carry(buckets, value_cols, step, rec.small)
+    elif keys or day_grid:
+        buckets = buckets.filter(bucket.isNotNull())
         rel = buckets.withColumn(
             "__next", F.lead(_BUCKET).over(Window.partitionBy(*keys).orderBy(_BUCKET))
         )
     else:
-        buckets = track_persist(buckets.persist(StorageLevel.MEMORY_AND_DISK))
-        n = int(buckets.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-        b1 = F.broadcast(
-            buckets.agg(F.min(_BUCKET).alias("__bmin"), F.max(_BUCKET).alias("__bmax"))
-        )
-        width = (
-            f"greatest({step}L, ((__bmax - __bmin) div {n} div {step} + 1) * {step}L)"
-        )
-        rel = _bucketed_scan(
-            buckets.crossJoin(b1).withColumn("__desc", -bucket),
-            ["__desc"], [("__next", _BUCKET, "min")], inclusive=False,
-            num_buckets=n, bucket_col=F.expr(f"(__bmax - `{_BUCKET}`) div {width}"),
+        rel = _epoch_scan(
+            buckets.filter(bucket.isNotNull()), step, [("__next", _BUCKET, "min")],
+            descending=True,
         )
     nxt = F.col("__next")
     if not process_batch_end:
@@ -234,3 +260,74 @@ def resample_last_interval(
             for c in value_cols
         ],
     )
+
+
+def _epoch_scan(
+    buckets: DataFrame, step: int, scans, *, descending: bool, total: Optional[str] = None
+) -> DataFrame:
+    """Exclusive bucketed prefix scan of an ungrouped epoch buckets
+    relation in label order (``descending``: reversed), on an equal-width
+    in-plan bucket id over the broadcast 1-row [min, max] label: no
+    construction job, and each scan bucket holds at most width/step rows
+    whatever the data's skew; a null label falls in the first bucket. The
+    scan reads the buckets three times (bounds, scan, scan seeds), so
+    they are persisted lazily -- not a localCheckpoint: on a dense grid
+    the relation approaches input size, and checkpoint blocks always hit
+    disk-backed storage (83 s vs 22 s at 30M rows)."""
+    buckets = track_persist(buckets.persist(StorageLevel.MEMORY_AND_DISK))
+    n = int(buckets.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    b1 = F.broadcast(
+        buckets.agg(F.min(_BUCKET).alias("__bmin"), F.max(_BUCKET).alias("__bmax"))
+    )
+    width = f"greatest({step}L, ((__bmax - __bmin) div {n} div {step} + 1) * {step}L)"
+    rows = buckets.crossJoin(b1)
+    if descending:
+        rows = rows.withColumn("__desc", -F.col(_BUCKET))
+        order, dist = "__desc", "__bmax - `__bucket`"
+    else:
+        order, dist = _BUCKET, "coalesce(`__bucket` - __bmin, 0)"
+    return _bucketed_scan(
+        rows, [order], scans, inclusive=False, num_buckets=n,
+        bucket_col=F.expr(f"({dist}) div {width}"), total=total,
+    )
+
+
+def _interval_carry(buckets: DataFrame, value_cols, step: int, small: bool) -> DataFrame:
+    """The gap fill's (__bucket, __row, __next) relation from per-interval
+    last non-null values: ``__row`` carries each column's last non-null
+    value up to its interval, as the event-level fill leaves it on the
+    interval's last event. A null label (null timestamps) sorts first,
+    so it feeds the carry, and then drops.
+
+    Small input: one window over the interval rows. Otherwise one
+    ascending exclusive scan gives each interval the previous label and
+    the carry into it, i.e. the previous interval's row; each interval
+    emits that row (so it reaches its blanks through the expansion, with
+    this interval as its next), and the last interval also emits its own.
+    """
+    bucket = F.col(_BUCKET)
+    if small:
+        w = Window.orderBy(_BUCKET)
+        carried = [F.last(c, ignorenulls=True).over(w).alias(c) for c in value_cols]
+        rel = buckets.select(
+            _BUCKET, F.struct(*carried).alias(_ROW), F.lead(_BUCKET).over(w).alias("__next")
+        )
+    else:
+        before = [f"__before{i}" for i in range(len(value_cols))]
+        scanned = _epoch_scan(
+            buckets, step,
+            [("__prev", _BUCKET, "max"), *[(b, c, "last") for b, c in zip(before, value_cols)]],
+            descending=False, total="__last",
+        )
+        prev_row = F.struct(*[F.col(b).alias(c) for b, c in zip(before, value_cols)])
+        own_row = F.struct(
+            *[F.coalesce(c, b).alias(c) for b, c in zip(before, value_cols)]
+        )
+        rel = scanned.select(F.inline(F.array(
+            F.struct(F.col("__prev").alias(_BUCKET), prev_row.alias(_ROW), bucket.alias("__next")),
+            F.when(bucket == F.col("__last"), F.struct(
+                bucket.alias(_BUCKET), own_row.alias(_ROW),
+                F.lit(None).cast("long").alias("__next"),
+            )),
+        )))
+    return rel.filter(bucket.isNotNull())

@@ -17,8 +17,8 @@ Planted graph (all closed-form, nothing collected):
 Truth is ANALYTIC: components are contiguous id ranges, so
 cluster_id(i) = its range base, and n_nodes / n_components /
 sum(cluster_id) all have closed forms (same in-run exactness pattern as
-tools/hamming_cell.py). Peak scratch disk is sampled from a pinned
-spark.local.dir.
+tools/hamming_cell.py). Peak scratch disk is sampled from the block
+manager's local directories (tools/harness.py::sample_scratch_peak).
 
 Usage: python tools/cc_cell.py --driver-mem 16g --cpus 32
 """
@@ -28,9 +28,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -65,17 +63,14 @@ def main():
     args = ap.parse_args()
 
     giants = [int(x) for x in args.giants.split(",") if x]
-    scratch = tempfile.mkdtemp(prefix="cc_cell_scratch_")
-
     from pyspark.sql import functions as F
 
-    from tools.harness import sample_disk_peak, session
+    from tools.harness import sample_scratch_peak, session
 
     if args.event_log_dir:
         os.makedirs(args.event_log_dir, exist_ok=True)
     spark = session("cc_cell", args.cpus, **{
         "spark.driver.memory": args.driver_mem,
-        "spark.local.dir": scratch,
         "spark.eventLog.enabled": "true" if args.event_log_dir else None,
         "spark.eventLog.dir": args.event_log_dir,
         "spark.driver.extraJavaOptions": args.driver_java_opts,
@@ -121,7 +116,7 @@ def main():
     for e in edge_dfs[1:]:
         edges = edges.unionByName(e)
 
-    stop_sampler = sample_disk_peak(scratch)
+    stop_sampler = sample_scratch_peak(spark)
 
     # pre-seeding round1_plan opts in to the plan-capture diagnostic
     stats: dict = {"round1_plan": None} if args.plan_out else {}
@@ -168,7 +163,6 @@ def main():
         "driver_mem": args.driver_mem,
     }))
     spark.stop()
-    shutil.rmtree(scratch, ignore_errors=True)
     sys.exit(0 if ok else 1)
 
 

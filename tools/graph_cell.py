@@ -30,9 +30,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -76,15 +74,12 @@ def main():
 
     stars = [int(x) for x in args.stars.split(",") if x]
     cycles = [int(x) for x in args.cycles.split(",") if x]
-    scratch = tempfile.mkdtemp(prefix="graph_cell_scratch_")
 
     from pyspark.sql import functions as F
 
-    from tools.harness import sample_disk_peak, session
+    from tools.harness import sample_scratch_peak, session
 
-    spark = session("graph_cell", args.cpus, **{
-        "spark.driver.memory": args.driver_mem, "spark.local.dir": scratch,
-    })
+    spark = session("graph_cell", args.cpus, **{"spark.driver.memory": args.driver_mem})
     from timeseriesfuser_spark.ops import graph as G
 
     # --- plant: stars then cycles over contiguous id ranges
@@ -121,7 +116,7 @@ def main():
     n_nodes = sum(l + 1 for l in stars) + sum(cycles)
     n_edges = sum(stars) + sum(cycles)
 
-    stop_sampler = sample_disk_peak(scratch)
+    stop_sampler = sample_scratch_peak(spark)
 
     stats: dict = {"round1_plan": None} if args.plan_out else {}
     t0 = time.perf_counter()
@@ -202,7 +197,6 @@ def main():
         **extra,
     }))
     spark.stop()
-    shutil.rmtree(scratch, ignore_errors=True)
     sys.exit(0 if ok else 1)
 
 

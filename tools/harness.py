@@ -4,7 +4,7 @@ query list, the machine-speed control workload and a per-query layer
 record.
 
     from tools.harness import session, measure
-    spark = session("my_cell", cpus="8", **{"spark.driver.memory": "48g"})
+    spark = session("my_cell", cpus="8", **{"spark.sql.shuffle.partitions": "64"})
     rec = measure("my_query", lambda: build_dataframe(spark))
 
 Job and stage attribution comes from ``perfbench.spans`` (job tags read
@@ -157,19 +157,28 @@ def measure(name: str, fn: Callable) -> dict:
     }
 
 
-def sample_disk_peak(path: str) -> Callable[[], int]:
-    """Start sampling the bytes under ``path`` every 2 s; the returned
-    function stops the sampler, takes one last sample and returns the
-    largest one."""
+def sample_scratch_peak(spark) -> Callable[[], int]:
+    """Start sampling, every 2 s, the bytes in the directories the
+    session's block manager writes shuffle, spill and disk-cache blocks
+    to; the returned function stops the sampler, takes one last sample
+    and returns the largest one.
+
+    The directories are read from the running JVM, not from
+    ``spark.local.dir``: ``SPARK_LOCAL_DIRS`` (or a cluster manager's
+    setting) overrides that key, and a sampler of the pinned directory
+    then reads 0."""
+    dirs = spark._jvm.org.apache.spark.SparkEnv.get().blockManager().diskBlockManager().localDirs()
+    paths = [d.getAbsolutePath() for d in dirs]
 
     def du() -> int:
         total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
+        for path in paths:
+            for root, _dirs, files in os.walk(path):
+                for f in files:
+                    try:
+                        total += os.path.getsize(os.path.join(root, f))
+                    except OSError:
+                        pass
         return total
 
     peak = [0]

@@ -50,7 +50,6 @@ def main() -> None:
     spark = session("tsf_make_scaled_sf", 32, **{
         "spark.sql.shuffle.partitions": "64",
         "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.driver.memory": "32g",
     })
 
     offsets = {

@@ -61,7 +61,7 @@ def main():
 
     from tools.harness import session
 
-    spark = session("zipf_cell", args.cpus, **{"spark.driver.memory": "48g"})
+    spark = session("zipf_cell", args.cpus)
     path = build_corpus(spark, args.docs, args.k, args.vocab, args.alpha)
     docs = spark.read.parquet(path)
 
