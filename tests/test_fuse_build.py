@@ -95,6 +95,19 @@ def test_each_source_probed_and_built_once(spark, two_sources, monkeypatch):
     assert set(keys) <= set(out.columns)
 
 
+@pytest.mark.parametrize("forward_fill", [False, True])
+def test_build_starts_no_job(spark, two_sources, forward_fill):
+    """The window probe reads its records on the driver and the parquet
+    scan takes its schema from the footer: no Spark job until the query
+    runs."""
+    def build():
+        fuser = TimeSeriesFuser(two_sources, forward_fill=forward_fill)
+        fuser.remap_keys(spark, ["Syn_id", "Price"])
+        fuser.fused(spark)
+
+    assert _jobs(spark, build) == 0
+
+
 def test_small_file_stream_fills_in_one_window(spark, two_sources, sketch_calls):
     fuser = TimeSeriesFuser(two_sources, forward_fill=True)
     filled = fuser.fused(spark)

@@ -21,7 +21,10 @@ and share one column. ``rename_identical=False`` disables renaming.
 
 Window and frames are resolved once per fuser: the per-source first/last
 row probes (reference core.py:145-213) and the source reads run on first
-use and are shared by ``rename_maps``/``remap_keys`` and ``fused``.
+use and are shared by ``rename_maps``/``remap_keys`` and ``fused``. For
+local parquet and declared-schema CSV sources the probe reads its two
+records on the driver and the parquet reads take their schema from the
+footers (``sources.readers``), so resolving starts no Spark job.
 
 Forward fill of a small file-backed stream runs as ONE plain window.
 When every kept source is read from files and the files' on-disk size

@@ -17,14 +17,22 @@ Normalization per source (reference core.py:320-351, 942-970):
   3. tag ``__src_id`` (≈ exsym_lookup, core.py:134-143,340) and a
      per-source arrival sequence ``__seq`` for deterministic tie-breaking
      (SURVEY.md §4.3: Spark's sort is not stable).
+
+Building a local parquet or declared-schema CSV source starts no Spark
+job: parquet scans take their schema from the footers the driver reads
+anyway (``_footer_schema``) instead of Spark's inference job, and the
+window probe reads each source's first and last record on the driver
+(:func:`probe_source_window`).
 """
 
 from __future__ import annotations
 
+import io
 import os
 import re
+from contextlib import contextmanager
 from dataclasses import replace
-from typing import List, Optional, Tuple
+from typing import Callable, Dict, Iterator, List, Mapping, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +45,10 @@ TS_COL = "__timestamp"
 SRC_ID_COL = "__src_id"
 SEQ_COL = "__seq"
 INTERNAL_COLS = (TS_COL, SRC_ID_COL, SEQ_COL)
+
+_TRIM = "".join(map(chr, range(33)))  # what Java's String.trim() strips
+_EOL = re.compile(rb"\r\n|\r|\n")  # line ends, as Hadoop's line reader splits
+_CHUNK = 1 << 20
 
 
 def _cast_to_declared(df: DataFrame, declared: T.StructType) -> DataFrame:
@@ -51,9 +63,68 @@ def _cast_to_declared(df: DataFrame, declared: T.StructType) -> DataFrame:
     )
 
 
-def _read_parquet_schema_groups(
-    spark: SparkSession, src: SourceConfig, declared: T.StructType
-) -> DataFrame:
+def _declared(src: SourceConfig, names: Callable[[], List[str]]) -> Optional[T.StructType]:
+    """The source's declared schema. A positional type list takes its
+    column names from ``src.columns``, else from ``names()`` (the first
+    file's header or footer)."""
+    positional = not (
+        src.schema is None or hasattr(src.schema, "fields") or hasattr(src.schema, "items")
+    )
+    return normalize_schema(
+        src.schema, names() if positional and src.columns is None else src.columns
+    )
+
+
+def _footer(path: str):
+    """One parquet footer: (``FileMetaData``, its Arrow schema)."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    return md, md.schema.to_arrow_schema()
+
+
+def _footer_schema(spark: SparkSession, footers) -> Optional[T.StructType]:
+    """The schema ``spark.read.parquet`` infers for files with these
+    footers (``_footer`` pairs), without its inference job. None where
+    only that job is exact: footers that differ, a column Spark does not
+    read as its Arrow type (unsigned, ns or INT96 timestamps, half floats,
+    nested or dictionary columns, ...), or a session setting that changes
+    the mapping."""
+    import pyarrow.types as pat
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    schema = footers[0][1]
+    plain = (
+        pat.is_boolean, pat.is_signed_integer, pat.is_float32, pat.is_float64,
+        pat.is_string, pat.is_large_string, pat.is_binary, pat.is_large_binary,
+        pat.is_date32, pat.is_decimal128,
+    )
+    if not all(
+        any(p(t) for p in plain) or (pat.is_timestamp(t) and t.unit != "ns")
+        for t in schema.types
+    ):
+        return None
+    if any(not s.equals(schema) for _, s in footers[1:]) or any(
+        md.schema.column(i).physical_type == "INT96"
+        for md, _ in footers
+        for i in range(md.num_columns)
+    ):
+        return None
+    conf = spark.conf
+    if (
+        conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true").lower() != "true"
+        or conf.get("spark.sql.parquet.binaryAsString", "false").lower() != "false"
+    ):
+        return None
+    return from_arrow_schema(schema, prefer_timestamp_ntz=True)
+
+
+def _parquet_scan(spark: SparkSession, paths: List[str], footers) -> DataFrame:
+    schema = _footer_schema(spark, footers) if footers else None
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(*paths)
+
+
+def _read_parquet(spark: SparkSession, src: SourceConfig) -> DataFrame:
     """Parquet read that survives *mixed physical schemas* within one
     directory (e.g. a column stored as DOUBLE in one file and INT64 in the
     next — present in the reference's own fixtures): group files by footer
@@ -61,26 +132,44 @@ def _read_parquet_schema_groups(
     Spark scan per group, cast each group to the declared schema, union.
 
     A homogeneous directory (the normal case at scale) yields exactly one
-    group — identical plan to a plain directory scan."""
+    group — identical plan to a plain directory scan. Each scan takes its
+    schema from the group's footers where they fix it, so building the
+    read starts no Spark job."""
     files = list_source_files(src) if os.path.isdir(src.path) else [src.path]
+    try:
+        footers = [_footer(f) for f in files]
+    except Exception:  # non-local paths etc.: Spark reads the footers
+        footers = None
+    declared = _declared(
+        src,
+        lambda: list(footers[0][1].names) if footers else spark.read.parquet(src.path).columns,
+    )
+    if declared is None:
+        # Spark scans every visible file of a directory, so the footers
+        # fix its schema only when they are all of them.
+        visible = (
+            [n for n in os.listdir(src.path) if not n.startswith((".", "_"))]
+            if os.path.isdir(src.path)
+            else files
+        )
+        whole = footers if len(visible) == len(files) else None
+        return _parquet_scan(spark, [src.path], whole)
     if not files:
         # No top-level .parquet files — a Hive-partitioned/nested layout.
         # Delegate to Spark's own directory scan (which discovers
         # partition directories and their columns) and cast through the
         # declared schema, instead of crashing on an empty group list.
         return _cast_to_declared(spark.read.parquet(src.path), declared)
-    try:
-        import pyarrow.parquet as pq
-
-        groups: dict = {}
-        for f in files:
-            key = tuple(str(t) for t in pq.read_schema(f).types)
-            groups.setdefault(key, []).append(f)
-    except Exception:  # non-local paths etc. — fall back to one scan
-        groups = {"all": files}
+    groups: dict = {}
+    for f, ft in zip(files, footers or [None] * len(files)):
+        key = "all" if ft is None else tuple(str(t) for t in ft[1].types)
+        groups.setdefault(key, []).append((f, ft))
     frames = [
-        _cast_to_declared(spark.read.parquet(*fs), declared)
-        for fs in groups.values()
+        _cast_to_declared(
+            _parquet_scan(spark, [f for f, _ in g], [ft for _, ft in g if ft]),
+            declared,
+        )
+        for g in groups.values()
     ]
     out = frames[0]
     for fr in frames[1:]:
@@ -92,15 +181,7 @@ def _read_raw(spark: SparkSession, src: SourceConfig) -> DataFrame:
     if src.df is not None:
         return src.df
     if src.fmt == "parquet":
-        declared = normalize_schema(src.schema, src.columns)
-        if declared is None and src.schema is not None:
-            # positional list: resolve names against one footer
-            declared = normalize_schema(
-                src.schema, spark.read.parquet(src.path).columns
-            )
-        if declared is not None:
-            return _read_parquet_schema_groups(spark, src, declared)
-        return spark.read.parquet(src.path)
+        return _read_parquet(spark, src)
     if src.fmt == "orc":
         # ORC: same columnar stance as parquet (vectorized scan, footer
         # stats pushdown). Declared schemas use cast-through semantics
@@ -151,7 +232,8 @@ def _read_raw(spark: SparkSession, src: SourceConfig) -> DataFrame:
     reader = spark.read.option("header", "true")
     for k, v in src.csv_options.items():
         reader = reader.option(k, v)
-    sep = str(src.csv_options.get("sep", src.csv_options.get("delimiter", ",")))
+    sep = _csv_sep(src)
+    encoding = _encoding(src.csv_options)
 
     # Local paths: resolve the EXPLICIT file list (chronological order) so a
     # stray file in the directory is never silently parsed, and zip archives
@@ -164,15 +246,14 @@ def _read_raw(spark: SparkSession, src: SourceConfig) -> DataFrame:
         )
     zipped = local and any(f.endswith(".zip") for f in files)
 
-    columns = src.columns
-    if columns is None and src.schema is not None and not hasattr(src.schema, "fields"):
-        if not hasattr(src.schema, "items"):  # positional list: sniff header
-            columns = (
-                _csv_header(files[0], sep) if local else reader.csv(src.path).columns
-            )
-    declared = normalize_schema(src.schema, columns)
+    declared = _declared(
+        src,
+        lambda: _csv_header(files[0], sep, encoding) if local else reader.csv(src.path).columns,
+    )
     if local and src.validate_headers and declared is not None:
-        validate_csv_headers(files, [f.name for f in declared.fields], sep=sep)
+        validate_csv_headers(
+            files, [f.name for f in declared.fields], sep=sep, encoding=encoding
+        )
     if zipped:
         if declared is None:
             raise ValueError(
@@ -186,32 +267,57 @@ def _read_raw(spark: SparkSession, src: SourceConfig) -> DataFrame:
     return reader.option("inferSchema", "true").csv(target)
 
 
-def _csv_header(path: str, sep: str = ",") -> List[str]:
-    """Driver-side read of one header line (plain / .gz / .zip member)."""
-    import csv as _csv
+def _csv_opts(options: Mapping) -> Dict[str, str]:
+    """CSV options keyed in lower case, as Spark reads option keys."""
+    return {k.lower(): str(v) for k, v in options.items()}
+
+
+def _csv_sep(src: SourceConfig) -> str:
+    return str(src.csv_options.get("sep", src.csv_options.get("delimiter", ",")))
+
+
+def _encoding(options: Mapping) -> str:
+    """The charset Spark decodes a CSV source with."""
+    opts = _csv_opts(options)
+    return opts.get("encoding", opts.get("charset", "utf-8"))
+
+
+@contextmanager
+def _csv_members(path: str) -> Iterator[List[Callable[[], io.BufferedIOBase]]]:
+    """Openers of a local CSV file's byte streams: the file itself (plain
+    or gzip), or each ``.csv`` member of a zip archive in archive order.
+    The header sniff, the header check and the window probe all open
+    files through this."""
     import gzip
-    import io
     import zipfile
 
-    if path.endswith(".gz"):
-        with gzip.open(path, "rt", encoding="utf-8", newline="") as fh:
-            return next(_csv.reader(fh, delimiter=sep))
     if path.endswith(".zip"):
         with zipfile.ZipFile(path) as zf:
-            member = next(
-                (n for n in zf.namelist() if n.lower().endswith(".csv")), None
-            )
-            if member is None:
-                raise RuntimeError(f"source [{path}]: no .csv member in archive")
-            with zf.open(member) as raw:
-                fh = io.TextIOWrapper(raw, encoding="utf-8", newline="")
-                return next(_csv.reader(fh, delimiter=sep))
-    with open(path, "rt", encoding="utf-8", newline="") as fh:
-        return next(_csv.reader(fh, delimiter=sep))
+            yield [
+                lambda n=n: zf.open(n)
+                for n in zf.namelist()
+                if n.lower().endswith(".csv")
+            ]
+    elif path.endswith(".gz"):
+        yield [lambda: gzip.open(path, "rb")]
+    else:
+        yield [lambda: open(path, "rb")]
+
+
+def _csv_header(path: str, sep: str = ",", encoding: str = "utf-8") -> List[str]:
+    """Driver-side read of one header line (plain / .gz / .zip member)."""
+    import csv as _csv
+
+    with _csv_members(path) as members:
+        if not members:
+            raise RuntimeError(f"source [{path}]: no .csv member in archive")
+        with members[0]() as raw:
+            fh = io.TextIOWrapper(raw, encoding=encoding, newline="")
+            return next(_csv.reader(fh, delimiter=sep))
 
 
 def validate_csv_headers(
-    files: List[str], expected: List[str], *, sep: str = ","
+    files: List[str], expected: List[str], *, sep: str = ",", encoding: str = "utf-8"
 ) -> None:
     """P6 malformed-file guard ≈ reference _check_transform_headers_on_load
     + _check_column_order (core.py:949-989): every file's header must
@@ -220,7 +326,7 @@ def validate_csv_headers(
     because Spark's CSV reader binds a user schema POSITIONALLY
     (enforceSchema), so a reordered file would misparse silently."""
     for f in files:
-        hdr = _csv_header(f, sep)
+        hdr = _csv_header(f, sep, encoding)
         if len(hdr) != len(expected):
             raise RuntimeError(
                 f"source [{f}] seems to be in the wrong format. Number of "
@@ -240,6 +346,16 @@ def validate_csv_headers(
             )
 
 
+def _from_csv(lines: DataFrame, declared: T.StructType, csv_options) -> DataFrame:
+    """Parse the ``__line`` column with the CSV reader's own parser and
+    options, into the declared columns."""
+    ddl = ", ".join(
+        f"`{f.name}` {f.dataType.simpleString()}" for f in declared.fields
+    )
+    opts = {k: str(v) for k, v in csv_options.items() if k.lower() != "header"}
+    return lines.select(F.from_csv("__line", ddl, opts).alias("__r")).select("__r.*")
+
+
 def _read_csv_zip(
     spark: SparkSession, files: List[str], declared: T.StructType, csv_options
 ) -> DataFrame:
@@ -253,10 +369,7 @@ def _read_csv_zip(
     driver."""
     import pandas as pd  # noqa: F401 (executor-side)
 
-    ddl = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in declared.fields
-    )
-    opts = {k: str(v) for k, v in csv_options.items() if k != "header"}
+    encoding = _encoding(csv_options)
 
     def _lines(it):
         import io
@@ -272,7 +385,7 @@ def _read_csv_zip(
                             continue
                         with zf.open(m) as raw:
                             txt = io.TextIOWrapper(
-                                raw, encoding="utf-8", newline=""
+                                raw, encoding=encoding, newline=""
                             )
                             buf: List[str] = []
                             for i, line in enumerate(txt):
@@ -288,13 +401,13 @@ def _read_csv_zip(
                                 yield pd.DataFrame({"__line": buf})
 
     bin_df = spark.read.format("binaryFile").load(files).select("content")
-    lines = bin_df.mapInPandas(_lines, schema="__line string")
-    return lines.select(F.from_csv("__line", ddl, opts).alias("__r")).select("__r.*")
+    return _from_csv(bin_df.mapInPandas(_lines, schema="__line string"), declared, csv_options)
 
 
-def build_source_df(spark: SparkSession, src: SourceConfig, src_id: int) -> DataFrame:
-    """Read + normalize one source (see module docstring)."""
-    df = _read_raw(spark, src)
+def _with_epoch_ts(df: DataFrame, src: SourceConfig) -> DataFrame:
+    """Steps 1-2 of the module docstring. The window probe applies the
+    same steps to its edge records, so its bounds are the values the
+    fused stream filters on."""
     drop = [c for c in src.remove_cols if c in df.columns]
     if drop:
         df = df.drop(*drop)
@@ -313,7 +426,12 @@ def build_source_df(spark: SparkSession, src: SourceConfig, src_id: int) -> Data
     df = df.withColumn(TS_COL, ts_ms)
     if src.ts_col != TS_COL:
         df = df.drop(src.ts_col)
+    return df
 
+
+def build_source_df(spark: SparkSession, src: SourceConfig, src_id: int) -> DataFrame:
+    """Read + normalize one source (see module docstring)."""
+    df = _with_epoch_ts(_read_raw(spark, src), src)
     # __seq: arrival order within the source (file listing order × row order)
     # — monotonically_increasing_id is deterministic for a fixed file layout
     # and never collides across partitions; used only as a sort tiebreaker.
@@ -361,6 +479,179 @@ def list_source_files(src: SourceConfig) -> List[str]:
     return [os.path.join(src.path, n) for n in sorted(names, key=key)]
 
 
+# --------------------------------------------------------------------- #
+# window probe
+
+
+def _lines(raw) -> Iterator[Tuple[int, bytes]]:
+    """(offset, line) of each line of a byte stream, first to last."""
+    pos, frag = 0, b""
+    while True:
+        chunk = raw.read(1 << 16)
+        buf, start = frag + chunk, 0
+        for m in _EOL.finditer(buf):
+            yield pos + start, buf[start:m.start()]
+            start = m.end()
+        if not chunk:
+            if start < len(buf):
+                yield pos + start, buf[start:]
+            return
+        frag, pos = buf[start:], pos + start
+
+
+def _last_in(text: bytes, keep, skip_first: bool) -> Optional[Tuple[int, bytes]]:
+    """(offset, line) of the last line of ``text`` that ``keep`` accepts,
+    searched from the end."""
+    end = len(text)
+    while True:
+        s = max(text.rfind(b"\n", 0, end), text.rfind(b"\r", 0, end)) + 1
+        if (s or not skip_first) and keep(text[s:end]):
+            return s, text[s:end]
+        if not s:
+            return None
+        end = s - 1
+
+
+def _last_kept(raw, keep, start: int = 0) -> Optional[Tuple[int, bytes]]:
+    """(offset, line) of the last line of a byte stream, from byte
+    ``start`` on, that ``keep`` accepts; the line ``start`` cuts is
+    skipped. Reads in chunks and carries only the unfinished line from
+    one chunk to the next."""
+    if start:
+        raw.seek(start)
+    best, pos, frag, cut = None, start, b"", start > 0
+    while True:
+        chunk = raw.read(_CHUNK)
+        buf = frag + chunk
+        end = max(buf.rfind(b"\n"), buf.rfind(b"\r")) if chunk else len(buf)
+        if end < 0:
+            frag = buf
+            continue
+        hit = _last_in(buf[:end], keep, cut)
+        if hit:
+            best = (pos + hit[0], hit[1])
+        if not chunk:
+            return best
+        frag, pos, cut = buf[end + 1:], pos + end + 1, False
+
+
+def _csv_edge(path: str, last: bool, keep) -> Optional[bytes]:
+    """The first (or ``last``) data line of one local CSV file, as the
+    source's reader parses it. Plain and gzip files: Spark's CSV reader
+    takes the first line ``keep`` accepts as the header and every later
+    one as data. Zip members: ``_read_csv_zip`` skips each member's first
+    line and keeps every later non-empty one."""
+    zipped = path.endswith(".zip")
+    keep = bool if zipped else keep
+    size = None if path.endswith((".gz", ".zip")) else os.path.getsize(path)
+    with _csv_members(path) as members:
+        for member in members[::-1] if last else members:
+            with member() as raw:
+                kept = ((o, line) for o, line in _lines(raw) if keep(line))
+                header = 0 if zipped else next(kept, (None,))[0]
+                if header is None:
+                    return None
+                hit = None if last else next((k for k in kept if k[0] > header), None)
+            if last:
+                # Plain files are read from the end, in growing windows;
+                # compressed streams in one pass.
+                span = _CHUNK
+                while True:
+                    start = max(0, size - span) if size else 0
+                    with member() as raw:
+                        hit = _last_kept(raw, keep, start)
+                    if hit or not start:
+                        break
+                    span *= 4
+            if hit and hit[0] > header:
+                return hit[1]
+    return None
+
+
+def _csv_edges(spark, src: SourceConfig, first: str, last: str) -> Optional[DataFrame]:
+    """The two edge records of a declared-schema CSV source, parsed with
+    ``from_csv`` from lines read on the driver; None where only Spark's
+    reader is exact (see :func:`probe_source_window`)."""
+    import pyarrow as pa
+
+    opts = _csv_opts(src.csv_options)
+    encoding = _encoding(src.csv_options)
+    comment = opts.get("comment", "").replace("\0", "")
+    try:
+        ascii_lines = "\r\n".encode(encoding) == b"\r\n"
+    except LookupError:
+        ascii_lines = False
+    if (
+        not ascii_lines
+        or len(comment) > 1
+        or opts.get("multiline", "false").lower() != "false"
+        or opts.get("mode", "").upper() == "DROPMALFORMED"
+        or opts.get("header", "true").lower() != "true"
+        or "linesep" in opts
+        or not all(f.endswith((".csv", ".gz", ".zip")) for f in (first, last))
+    ):
+        return None
+    sep = _csv_sep(src)
+    declared = [_declared(src, lambda f=f: _csv_header(f, sep, encoding)) for f in (first, last)]
+    if declared[0] is None or declared[0] != declared[1]:
+        return None
+    if src.validate_headers:
+        validate_csv_headers(
+            list(dict.fromkeys((first, last))), declared[0].names, sep=sep, encoding=encoding
+        )
+
+    def keep(line: bytes) -> bool:  # Spark's filterCommentAndEmpty
+        text = line.decode(encoding, "replace")
+        return bool(text.strip(_TRIM)) and not (comment and text.startswith(comment))
+
+    edges = [_csv_edge(first, False, keep), _csv_edge(last, True, keep)]
+    texts = [] if None in edges else [e.decode(encoding, "replace") for e in edges]
+    lines = spark.createDataFrame(pa.table({"__line": pa.array(texts, pa.string())}))
+    return _from_csv(lines, declared[0], src.csv_options)
+
+
+def _parquet_edges(spark, src: SourceConfig, first: str, last: str) -> Optional[DataFrame]:
+    """The ts column of a parquet source's two edge records, read with
+    pyarrow from the first non-empty row group of ``first`` and the last
+    one of ``last``, cast through the declared type; None where only
+    Spark's reader is exact (see :func:`probe_source_window`)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    values, fields, types = [], [], []
+    for i, path in enumerate((first, last)):
+        md, schema = _footer(path)
+        struct = _footer_schema(spark, [(md, schema)])
+        if struct is None or src.ts_col not in schema.names:
+            return None
+        declared = _declared(src, lambda: list(schema.names))
+        raw = struct[src.ts_col].dataType
+        to = (
+            declared[src.ts_col].dataType
+            if declared is not None and src.ts_col in declared.names
+            else None
+        )
+        fields.append((T.StructField(f"c{i}", raw), schema.field(src.ts_col).type, to))
+        types.append(to or raw)
+        groups = [g for g in range(md.num_row_groups) if md.row_group(g).num_rows]
+        if groups:
+            with pq.ParquetFile(path, metadata=md) as pf:
+                col = pf.read_row_group(groups[-i], columns=[src.ts_col]).column(0)
+            values.append(col.slice(len(col) - 1 if i else 0, 1).combine_chunks())
+    if types[0] != types[1]:
+        return None
+    # Row i holds edge i in column c{i}, so each edge is cast from its own
+    # file's type before the coalesce; an empty edge file gives no rows.
+    table = pa.table({
+        f.name: pa.concat_arrays([pa.nulls(i, at), values[i], pa.nulls(1 - i, at)])
+        if len(values) == 2 else pa.array([], at)
+        for i, (f, at, _) in enumerate(fields)
+    })
+    frame = spark.createDataFrame(table, T.StructType([f for f, _, _ in fields]))
+    cols = [F.col(f.name) if to is None else F.col(f.name).cast(to) for f, _, to in fields]
+    return frame.select(F.coalesce(*cols).alias(src.ts_col))
+
+
 def probe_source_window(spark: SparkSession, src: SourceConfig) -> Tuple[int, int]:
     """Per-source processing window: (first row of the chronologically first
     file, last row of the last file), in epoch ms after ts normalization.
@@ -370,7 +661,36 @@ def probe_source_window(spark: SparkSession, src: SourceConfig) -> Tuple[int, in
     out-of-order rows before the first row / after the last row fall outside
     the window and are dropped, matching the reference's replay semantics.
 
-    Cost: two single-file scans with limit/tail — negligible at any scale.
+    Like the reference, the two records are read on one node, the driver,
+    and put into a two-row local frame, so the probe starts no Spark job:
+
+    - parquet: pyarrow reads only the ts column of the first non-empty row
+      group of the first file and of the last non-empty row group of the
+      last file; Spark casts each through the declared type;
+    - CSV with a declared schema (plain, .gz, .zip): the header is
+      skipped, the first data line of the first file is read from its
+      start, and the last data line of the last file from its end (plain)
+      or by streaming its bytes and keeping only the tail (compressed);
+      ``from_csv`` parses both with the reader's own options.
+
+    Both then take ``build_source_df``'s ts normalization. A
+    ``ts_converter`` sees only the ts column here, and under ``FAILFAST`` a
+    malformed line between the edges raises when the query runs, not in
+    the probe. Where the driver read
+    cannot match Spark's reader it keeps Spark's ``head``/``tail`` probe,
+    whose ``tail`` reads the whole last file:
+
+    - ``multiLine`` CSV: a record may span lines;
+    - ``DROPMALFORMED``: a dropped line moves the edge to the next one,
+      and ``from_csv`` has no such mode;
+    - ``lineSep``, a charset whose line ends are not ASCII bytes, a file
+      of another codec, or a ``header`` option of false: lines split or
+      read differently;
+    - CSV with no declared schema, and parquet whose footer types Spark
+      does not read as their Arrow types (``_footer_schema``): the types
+      come from Spark's inference;
+    - JSON and ORC: no driver reader here.
+
     For prebuilt-DataFrame or non-local sources there is no file order, so
     min/max of the timestamp axis is used instead.
     """
@@ -381,6 +701,11 @@ def probe_source_window(spark: SparkSession, src: SourceConfig) -> Tuple[int, in
     files = list_source_files(src)
     if not files:
         raise FileNotFoundError(f"Source {src.name!r}: no {src.fmt} files in {src.path}")
+    read = {"parquet": _parquet_edges, "csv": _csv_edges}.get(src.fmt)
+    edges = read and read(spark, src, files[0], files[-1])
+    if edges is not None:
+        rows = _with_epoch_ts(edges, src).select(TS_COL).collect()
+        return (rows[0][0], rows[1][0]) if rows else (None, None)
     first_df = build_source_df(spark, replace(src, path=files[0]), 0)
     head = first_df.select(TS_COL).head(1)
     last_df = (
