@@ -259,21 +259,27 @@ def test_tfidf_top_terms_ranks_distinctive_token(spark):
     assert all(r["count"] <= 2 for r in per_doc)
 
 
-def test_adaptive_signature_paths_agree(docs):
+def test_adaptive_signature_paths_agree(spark, docs, tmp_path, monkeypatch):
     """The per-row-projection and explode+aggregate signature strategies
-    must produce byte-identical pairs — force each via small_input_bytes."""
-    from timeseriesfuser_spark.ops.dedup import minhash_lsh_pairs, simhash_pairs
+    must produce byte-identical pairs — force each via the
+    ``ops.util.SMALL_INPUT_BYTES`` bound on a file-backed input (an
+    in-memory frame has no size estimate and always takes the aggregate)."""
+    from timeseriesfuser_spark.ops import dedup as D
+    from timeseriesfuser_spark.ops import util as ops_util
 
-    big = 1 << 60  # everything counts as small -> per-row path
+    docs.write.parquet(str(tmp_path / "docs"))
+    files = spark.read.parquet(str(tmp_path / "docs"))
     for fn, kw in [
         (minhash_lsh_pairs, dict(num_hashes=16, bands=4, threshold=0.4)),
         (simhash_pairs, dict(bits=48, max_hamming=3)),
     ]:
-        perrow = {tuple(sorted(r.asDict().items()))
-                  for r in fn(docs, small_input_bytes=big, **kw).collect()}
-        vector = {tuple(sorted(r.asDict().items()))
-                  for r in fn(docs, small_input_bytes=0, **kw).collect()}
-        assert perrow == vector and len(perrow) > 0
+        got = []
+        for bound in (1 << 60, 0):  # the per-row path, then the aggregate
+            monkeypatch.setattr(ops_util, "SMALL_INPUT_BYTES", bound)
+            assert D._use_perrow_signatures(files) == bool(bound)
+            got.append({tuple(sorted(r.asDict().items()))
+                        for r in fn(files, **kw).collect()})
+        assert got[0] == got[1] and len(got[0]) > 0
 
 
 def test_connected_components_long_chain(spark):
@@ -344,3 +350,36 @@ def test_minhash_between_finds_cross_pairs_only(spark):
                                               threshold=0.5).collect()}
     assert (101, 1) in got and got[(101, 1)] == 1.0
     assert all(k == (101, 1) for k in got)
+
+
+def test_band_join_self_and_between_modes_agree(spark):
+    """The shared first-shared-band join in its two modes: between a corpus
+    and itself, every self-join pair appears in both orientations with the
+    same jaccard, each doc that has shingles pairs with itself at 1.0, and
+    nothing else appears."""
+    import random
+
+    from timeseriesfuser_spark.ops.dedup import minhash_lsh_pairs_between
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(40)]
+    bases = [[rng.choice(vocab) for _ in range(12)] for _ in range(6)]
+    rows = []
+    for i in range(30):
+        words = list(bases[i % 6])
+        for _ in range(i % 4):  # 0-3 word edits: exact and near copies
+            words[rng.randrange(len(words))] = rng.choice(vocab)
+        rows.append((i, " ".join(words)))
+    rows += [(100, "too short"), (101, "")]  # no 3-gram shingles
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    kw = dict(num_hashes=16, bands=8, threshold=0.3)
+
+    self_rows = minhash_lsh_pairs(docs, **kw).collect()
+    between_rows = minhash_lsh_pairs_between(docs, docs, **kw).collect()
+    pairs = {(r.id_a, r.id_b): r.jaccard for r in self_rows}
+    between = {(r.new_id, r.ref_id): r.jaccard for r in between_rows}
+    # each pair once, at its first shared band
+    assert len(pairs) == len(self_rows) > 30 and len(between) == len(between_rows)
+    want = {**pairs, **{(b, a): j for (a, b), j in pairs.items()}}
+    want.update({(i, i): 1.0 for i in range(30)})
+    assert between == want

@@ -13,7 +13,11 @@ import pytest
 
 from timeseriesfuser_spark.config import SourceConfig
 from timeseriesfuser_spark.operators.fuse import TimeSeriesFuser
-from timeseriesfuser_spark.sources.readers import build_source_df, list_source_files
+from timeseriesfuser_spark.sources.readers import (
+    build_source_df,
+    list_source_files,
+    probe_source_window,
+)
 
 HDR = "Timestamp,Price,Qty"
 ROWS1 = ["1000,1.5,10", "2000,2.5,20"]
@@ -146,3 +150,37 @@ def test_fuse_over_zip_source_end_to_end(spark, tmp_path):
     assert [(r["__timestamp"], r["Price"]) for r in out] == [
         (t, p) for (t, p, _) in WANT
     ]
+
+
+ROWS3 = ROWS1 + ["3000,3.5,30"]
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        "\n".join([HDR] + ROWS3 + ["  "]) + "\n",  # whitespace-only last line
+        "\n \r\n" + "\n".join([HDR] + ROWS3) + "\n\t\n",  # blank lines around
+    ],
+    ids=["trailing_blank", "leading_blank"],
+)
+def test_zip_member_lines_follow_spark_csv_rules(spark, tmp_path, text):
+    """A zip member's blank and whitespace-only lines are dropped and its
+    first non-blank line is the header, as Spark's CSV reader does with
+    the same text unzipped: both read 3 rows, probe the same window and
+    fuse to 3 rows."""
+    zdir, cdir = tmp_path / "z", tmp_path / "c"
+    zdir.mkdir(), cdir.mkdir()
+    (cdir / "d_1.csv").write_text(text)
+    with zipfile.ZipFile(zdir / "d_1.zip", "w") as zf:
+        zf.writestr("d_1.csv", text)
+    windows = []
+    for d in (cdir, zdir):
+        src = SourceConfig(
+            name="s", path=str(d), fmt="csv",
+            schema={"Timestamp": int, "Price": float, "Qty": int},
+            validate_headers=False,
+        )
+        assert collect(spark, src) == WANT[:3]
+        windows.append(probe_source_window(spark, src))
+        assert TimeSeriesFuser([src]).fused(spark).count() == 3
+    assert windows[0] == windows[1] == (1000, 3000)

@@ -1,6 +1,12 @@
 """Deduplication operators: exact, n-gram Jaccard (inverted index),
 MinHash+LSH, SimHash.
 
+Shared joins, one implementation each: the pigeonhole chunk join
+(:func:`_chunk_pairs`), the MinHash first-shared-band join
+(:func:`_first_band_pairs`), the exact-Jaccard verify
+(:func:`_jaccard_verify`) and the n-gram inverted-index join
+(:func:`_shingle_overlaps`).
+
 Scale design (the 100 TB bar):
 
 - *exact*: one hash-groupBy — partial aggregation map-side, single shuffle.
@@ -29,9 +35,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from timeseriesfuser_spark.ops import text as _text
+from timeseriesfuser_spark.ops import util as ops_util
 from timeseriesfuser_spark.ops.util import (
     track_persist,
-    SMALL_INPUT_BYTES,
     estimated_input_bytes,
     observed_metrics,
     spread_small_input,
@@ -345,6 +351,54 @@ def _window_cap(
     return w.withColumn("__sub", sub.cast("long")).drop("__bn")
 
 
+def _shingle_overlaps(sh: DataFrame) -> DataFrame:
+    """The inverted-index self-join of the n-gram ops: (id_a, id_b,
+    intersection) for every pair of the exploded (id, sh) relation sharing
+    at least one shingle, id_a < id_b."""
+    a, b = sh.alias("a"), sh.alias("b")
+    return (
+        a.join(b, F.col("a.sh") == F.col("b.sh"))
+        .filter(F.col("a.id") < F.col("b.id"))
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("intersection"))
+    )
+
+
+def _jaccard_verify(
+    cand: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    set_col: str,
+    keys: tuple = ("id_a", "id_b"),
+    dtype: "str | None" = None,
+) -> DataFrame:
+    """The exact-Jaccard verify of every blocked join in this module: join
+    the candidate pairs on ``keys`` to the doc-level (``id``, ``set_col``)
+    shingle-array relations of each side and add ``intersection``
+    (``array_intersect`` size, in codegen), ``union_size`` (both cast to
+    ``dtype`` when given) and ``jaccard``. Two joins on a doc-count-sized
+    relation instead of shuffles of the exploded shingles. The threshold
+    filter and the output columns stay with the caller."""
+    ka, kb = keys
+    inter = F.size(F.array_intersect("__shs_a", "__shs_b"))
+    union = F.size("__shs_a") + F.size("__shs_b") - F.col("intersection")
+    if dtype is not None:
+        inter, union = inter.cast(dtype), union.cast(dtype)
+    return (
+        cand.join(
+            sets_a.select(F.col("id").alias(ka), F.col(set_col).alias("__shs_a")), ka
+        )
+        .join(
+            sets_b.select(F.col("id").alias(kb), F.col(set_col).alias("__shs_b")), kb
+        )
+        .withColumn("intersection", inter)
+        .withColumn("union_size", union)
+        .withColumn(
+            "jaccard", F.col("intersection").cast("double") / F.col("union_size")
+        )
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -381,15 +435,9 @@ def ngram_jaccard_pairs(
             footprint_bytes=_cache_footprint(df),
         )
         sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-        a, b = sh.alias("a"), sh.alias("b")
-        inter = (
-            a.join(b, F.col("a.sh") == F.col("b.sh"))
-            .filter(F.col("a.id") < F.col("b.id"))
-            .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("intersection"))
-        )
         out = (
-            inter.join(sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a")
+            _shingle_overlaps(sh)
+            .join(sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a")
             .join(sizes.withColumnsRenamed({"id": "id_b", "sz": "sz_b"}), "id_b")
             .withColumn(
                 "union_size", F.col("sz_a") + F.col("sz_b") - F.col("intersection")
@@ -416,14 +464,7 @@ def ngram_jaccard_pairs(
     # back — the price that caps the quadratic hot-shingle fan-out.
     dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("__df"))
     rare = sh.join(dfreq.filter(F.col("__df") <= max_df).select("sh"), "sh")
-    a, b = rare.alias("a"), rare.alias("b")
-    cand = (
-        a.join(b, F.col("a.sh") == F.col("b.sh"))
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("__shared_rare"))
-        .drop("__shared_rare")
-    )
+    cand = _shingle_overlaps(rare).drop("intersection")
     if _bound_filter:
         # Bitmap overlap bound before the exact verify (the
         # set_similarity_pairs round-19 scheme — see _join_bound_sketches
@@ -443,31 +484,10 @@ def ngram_jaccard_pairs(
             )
             .select("id_a", "id_b")
         )
-    out = (
-        cand.join(
-            docs.select(F.col("id").alias("id_a"), F.col("__shs").alias("__shs_a")),
-            "id_a",
-        )
-        .join(
-            docs.select(F.col("id").alias("id_b"), F.col("__shs").alias("__shs_b")),
-            "id_b",
-        )
-        .withColumn(
-            "intersection",
-            F.size(F.array_intersect("__shs_a", "__shs_b")).cast("long"),
-        )
-        .withColumn(
-            "union_size",
-            (
-                F.size("__shs_a") + F.size("__shs_b") - F.col("intersection")
-            ).cast("long"),
-        )
-        .withColumn(
-            "jaccard", F.col("intersection").cast("double") / F.col("union_size")
-        )
-        .filter(F.col("jaccard") >= threshold)
+    out = _jaccard_verify(cand, docs, docs, "__shs", dtype="long")
+    return out.filter(F.col("jaccard") >= threshold).select(
+        "id_a", "id_b", "intersection", "union_size", "jaccard"
     )
-    return out.select("id_a", "id_b", "intersection", "union_size", "jaccard")
 
 
 MINHASH_MASK = (1 << 52) - 1
@@ -543,7 +563,7 @@ def _band_keys_col(shs_name: str, num_hashes: int, bands: int) -> Column:
     )
 
 
-def _use_perrow_signatures(df: DataFrame, small_input_bytes: int) -> bool:
+def _use_perrow_signatures(df: DataFrame) -> bool:
     """Adaptive physical strategy (the same call Catalyst makes between
     broadcast and shuffle joins, made here from input statistics):
 
@@ -556,9 +576,11 @@ def _use_perrow_signatures(df: DataFrame, small_input_bytes: int) -> bool:
       wins when execution is CPU-bound (measured ~2x faster at 1M docs;
       interpreted higher-order-function eval pays per-element object
       overhead that codegen doesn't).
+
+    The bound is ``ops.util.SMALL_INPUT_BYTES``, read at call time.
     """
     est = estimated_input_bytes(df)
-    return est is not None and est < small_input_bytes
+    return est is not None and est < ops_util.SMALL_INPUT_BYTES
 
 
 def minhash_signatures(
@@ -575,7 +597,13 @@ def minhash_signatures(
     This wide (id, h0..h{k-1}) surface keeps the hash computation in a
     vectorized aggregate; the LSH path below never materializes it,
     using the per-row ``_band_keys_col`` projection instead."""
-    sh = shingles_df(df, id_col, text_col, n)
+    return _minhash_agg(shingles_df(df, id_col, text_col, n), num_hashes)
+
+
+def _minhash_agg(sh: DataFrame, num_hashes: int) -> DataFrame:
+    """(id, h0..h{k-1}) of an exploded (id, sh) shingle relation: one md5
+    per shingle, split into the two double-hash halves, and one groupBy
+    taking each hash function's min."""
     hx = F.md5(F.col("sh"))
     hashed = sh.select(
         "id",
@@ -602,7 +630,6 @@ def _banded_relation(
     num_hashes: int,
     bands: int,
     cache: bool,
-    small_input_bytes: int,
     size_hint=None,
 ):
     """(darr, buckets) for one corpus: the doc-level shingle-array
@@ -623,27 +650,13 @@ def _banded_relation(
         shingle_array(text_col, n).alias("shs"),
     )
     nonempty = darr.filter(F.size("shs") > 0)
-    if _use_perrow_signatures(df, small_input_bytes):
+    if _use_perrow_signatures(df):
         keyed = nonempty.select(
             "id", _band_keys_col("shs", num_hashes, bands).alias("__bk")
         )
     else:
-        sh = nonempty.select("id", F.explode("shs").alias("sh"))
-        hx = F.md5(F.col("sh"))
-        hashed = sh.select(
-            "id",
-            F.conv(F.substring(hx, 1, 13), 16, 10).cast("long").alias("__h1"),
-            F.conv(F.substring(hx, 14, 13), 16, 10).cast("long").alias("__h2"),
-        )
-        sig = hashed.groupBy("id").agg(
-            *[
-                F.min(
-                    (F.col("__h1") + F.lit(i) * F.col("__h2")).bitwiseAND(
-                        F.lit(MINHASH_MASK)
-                    )
-                ).alias(f"h{i}")
-                for i in range(num_hashes)
-            ]
+        sig = _minhash_agg(
+            nonempty.select("id", F.explode("shs").alias("sh")), num_hashes
         )
         keyed = sig.select(
             "id",
@@ -689,6 +702,46 @@ def _banded_relation(
     return darr, buckets
 
 
+def _first_band_pairs(
+    a_rel: DataFrame,
+    b_rel: "DataFrame | None" = None,
+    names: tuple = ("id_a", "id_b"),
+) -> DataFrame:
+    """The MinHash band join: pairs of ``a_rel`` and ``b_rel`` banding rows
+    (:func:`_banded_relation`) that share a (band, bkey) bucket, each
+    emitted once, at its FIRST shared band, as ``names``. ``b_rel=None``
+    self-joins ``a_rel`` and keeps ``id_a < id_b``.
+
+    The first-shared-band predicate in the join's codegen replaces a
+    global distinct (which would re-shuffle the whole candidate
+    relation). Exact: if two docs share band c' < c they necessarily
+    co-occur in that bucket too, so exactly one band emits. The check
+    scans the FULL __bk array, so it stays exact under band batching: a
+    pair meeting in a later batch whose first shared band was in an
+    earlier batch is suppressed here and emitted by the earlier batch."""
+    a, b = a_rel.alias("a"), (a_rel if b_rel is None else b_rel).alias("b")
+    no_earlier_band = ~F.exists(
+        F.slice(
+            F.zip_with(F.col("a.__bk"), F.col("b.__bk"), lambda p, q: p == q),
+            F.lit(1),
+            F.col("a.band"),
+        ),
+        lambda e: e,
+    )
+    cond = no_earlier_band
+    if b_rel is None:
+        cond = (F.col("a.id") < F.col("b.id")) & no_earlier_band
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bkey") == F.col("b.bkey")),
+        )
+        .filter(cond)
+        .select(F.col("a.id").alias(names[0]), F.col("b.id").alias(names[1]))
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -699,7 +752,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     verify: bool = True,
     cache: bool = True,
-    small_input_bytes: int = SMALL_INPUT_BYTES,
     max_bucket="auto",
     size_hint: int | None = None,
     band_batches: int | None = None,
@@ -731,66 +783,30 @@ def minhash_lsh_pairs(
     Probabilistic recall — candidate *generation* may miss pairs; the
     verification step has no false positives.
 
-    Verification joins the candidate pairs against a *doc-level* shingle
-    ARRAY relation (one row per doc) and computes |A∩B| via
-    ``array_intersect`` in codegen — two joins on a doc-count-sized
-    relation instead of three shuffles of the exploded shingle relation.
-
     Shuffle inventory (the 100 TB budget): signature strategy is adaptive
     (``_use_perrow_signatures``) — per-row projection (zero shuffles) on
     small inputs, explode + codegen hash-aggregate (one shuffle) on large
     ones; candidate generation is ONE equi-join on (band, bkey) with pair
     dedup done by a bitwise "first shared band" predicate inside the join
     (no global ``distinct`` re-shuffle of the pair relation);
-    verification is two joins on doc ids. Hot buckets (floods of
-    identical docs) fan out k² in the join as in any LSH — AQE skew-join
-    splits them; run ``exact_duplicates`` first to collapse identical
-    content; ``max_bucket`` defaults to the family-wide "auto" cap
-    (:data:`DEFAULT_MAX_BUCKET`) dropping pathological buckets from
-    candidate generation, counted as the observed metric
-    ``minhash_lsh_pairs.bucket_cap`` — ``None`` disables
+    verification is two joins on doc ids (:func:`_jaccard_verify`). Hot
+    buckets (floods of identical docs) fan out k² in the join as in any
+    LSH — AQE skew-join splits them; run ``exact_duplicates`` first to
+    collapse identical content; ``max_bucket`` defaults to the
+    family-wide "auto" cap (:data:`DEFAULT_MAX_BUCKET`) dropping
+    pathological buckets from candidate generation, counted as the
+    observed metric ``minhash_lsh_pairs.bucket_cap`` — ``None`` disables
     (:func:`_window_cap`).
     Zero-shingle docs never enter the band join (they cannot reach any
     positive Jaccard threshold).
     """
     darr, buckets = _banded_relation(
-        df, id_col, text_col, n, num_hashes, bands, cache, small_input_bytes,
-        size_hint,
+        df, id_col, text_col, n, num_hashes, bands, cache, size_hint
     )
 
     def _capped(rel: DataFrame) -> DataFrame:
         return _window_cap(
             rel, ["band", "bkey"], max_bucket, "minhash_lsh_pairs"
-        )
-
-    def _pair_join(grp: DataFrame) -> DataFrame:
-        a, b_ = grp.alias("a"), grp.alias("b")
-        # Emit each pair only at its FIRST shared band: a codegen
-        # predicate in the join replaces the global distinct (which would
-        # re-shuffle the whole candidate relation). Exact: if two docs
-        # share band c' < c they necessarily co-occur in that bucket too,
-        # so exactly one band emits. The check scans the FULL __bk array,
-        # so it stays exact under band batching: a pair meeting in a
-        # later batch whose first shared band was in an earlier batch is
-        # suppressed here and emitted by the earlier batch.
-        no_earlier_band = ~F.exists(
-            F.slice(
-                F.zip_with(
-                    F.col("a.__bk"), F.col("b.__bk"), lambda p, q: p == q
-                ),
-                F.lit(1),
-                F.col("a.band"),
-            ),
-            lambda e: e,
-        )
-        return (
-            a.join(
-                b_,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bkey") == F.col("b.bkey")),
-            )
-            .filter((F.col("a.id") < F.col("b.id")) & no_earlier_band)
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         )
 
     if band_batches is not None and int(band_batches) < 1:
@@ -837,7 +853,7 @@ def minhash_lsh_pairs(
             grp = _capped(
                 buckets.filter((F.col("band") >= lo) & (F.col("band") < hi))
             )
-            batch = _pair_join(grp)
+            batch = _first_band_pairs(grp)
             parts.append(batch.localCheckpoint(eager=True))
             dropped.update(
                 observed_metrics(batch).get("minhash_lsh_pairs.bucket_cap", {})
@@ -859,27 +875,11 @@ def minhash_lsh_pairs(
             lambda x, y: x.unionByName(y), parts
         )
     else:
-        cand = _pair_join(_capped(buckets))
+        cand = _first_band_pairs(_capped(buckets))
     if not verify:
         return cand
-    ja = darr.select(F.col("id").alias("id_a"), F.col("shs").alias("__shs_a"))
-    jb = darr.select(F.col("id").alias("id_b"), F.col("shs").alias("__shs_b"))
-    out = (
-        cand.join(ja, "id_a")
-        .join(jb, "id_b")
-        .withColumn(
-            "intersection", F.size(F.array_intersect("__shs_a", "__shs_b"))
-        )
-        .withColumn(
-            "union_size",
-            F.size("__shs_a") + F.size("__shs_b") - F.col("intersection"),
-        )
-        .withColumn(
-            "jaccard", F.col("intersection").cast("double") / F.col("union_size")
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return out.select("id_a", "id_b", "jaccard")
+    out = _jaccard_verify(cand, darr, darr, "shs")
+    return out.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
 
 
 def minhash_lsh_pairs_between(
@@ -893,7 +893,6 @@ def minhash_lsh_pairs_between(
     threshold: float = 0.5,
     verify: bool = True,
     cache: bool = True,
-    small_input_bytes: int = SMALL_INPUT_BYTES,
     max_bucket="auto",
 ) -> DataFrame:
     """Cross-corpus near-dup pairs: every ``df_new`` document that MinHash-
@@ -911,12 +910,10 @@ def minhash_lsh_pairs_between(
     |new| × |ref|.
     """
     darr_n, buckets_n = _banded_relation(
-        df_new, id_col, text_col, n, num_hashes, bands, cache,
-        small_input_bytes,
+        df_new, id_col, text_col, n, num_hashes, bands, cache
     )
     darr_r, buckets_r = _banded_relation(
-        df_ref, id_col, text_col, n, num_hashes, bands, cache,
-        small_input_bytes,
+        df_ref, id_col, text_col, n, num_hashes, bands, cache
     )
     # The cap applies to BOTH sides' bucket sizes independently: a pair is
     # suppressed if either side's bucket is hot. The ref side (accumulated
@@ -930,44 +927,13 @@ def minhash_lsh_pairs_between(
         buckets_n, ["band", "bkey"], max_bucket,
         "minhash_lsh_pairs_between(new)",
     )
-    a, b_ = buckets_n.alias("a"), buckets_r.alias("b")
-    no_earlier_band = ~F.exists(
-        F.slice(
-            F.zip_with(F.col("a.__bk"), F.col("b.__bk"), lambda p, q: p == q),
-            F.lit(1),
-            F.col("a.band"),
-        ),
-        lambda e: e,
-    )
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey")),
-        )
-        .filter(no_earlier_band)
-        .select(F.col("a.id").alias("new_id"), F.col("b.id").alias("ref_id"))
-    )
+    cand = _first_band_pairs(buckets_n, buckets_r, ("new_id", "ref_id"))
     if not verify:
         return cand
-    ja = darr_n.select(F.col("id").alias("new_id"), F.col("shs").alias("__shs_a"))
-    jb = darr_r.select(F.col("id").alias("ref_id"), F.col("shs").alias("__shs_b"))
-    out = (
-        cand.join(ja, "new_id")
-        .join(jb, "ref_id")
-        .withColumn(
-            "intersection", F.size(F.array_intersect("__shs_a", "__shs_b"))
-        )
-        .withColumn(
-            "union_size",
-            F.size("__shs_a") + F.size("__shs_b") - F.col("intersection"),
-        )
-        .withColumn(
-            "jaccard", F.col("intersection").cast("double") / F.col("union_size")
-        )
-        .filter(F.col("jaccard") >= threshold)
+    out = _jaccard_verify(cand, darr_n, darr_r, "shs", ("new_id", "ref_id"))
+    return out.filter(F.col("jaccard") >= threshold).select(
+        "new_id", "ref_id", "jaccard"
     )
-    return out.select("new_id", "ref_id", "jaccard")
 
 
 def simhash_from_hashes(hashes: Column, bits: int = 32) -> Column:
@@ -1008,6 +974,72 @@ def simhash_col(text_col: str, bits: int = 32) -> Column:
     return simhash_from_hashes(token_hashes(text_col), bits)
 
 
+def _chunk_masks(bits: int, nchunks: int) -> list:
+    """Pigeonhole chunk masks of a ``bits``-bit hash cut into ``nchunks``
+    equal chunks, the last one taking the remainder bits. A top chunk
+    reaching bit 63 wraps to the signed BIGINT literal (two's complement —
+    bitwiseAND is unaffected)."""
+    chunk = bits // nchunks
+    masks = []
+    for c in range(nchunks):
+        width = chunk if c < nchunks - 1 else bits - chunk * (nchunks - 1)
+        m = ((1 << width) - 1) << (c * chunk)
+        masks.append(m if m < 1 << 63 else m - (1 << 64))
+    return masks
+
+
+def _chunk_explode(sig: DataFrame, masks: list, *extra: str) -> DataFrame:
+    """(id, sh, *extra, chunk, ckey): one row per chunk of each hash
+    ``sh``, its key the hash under that chunk's mask."""
+    structs = [
+        F.struct(F.lit(c).alias("chunk"), F.col("sh").bitwiseAND(F.lit(m)).alias("ckey"))
+        for c, m in enumerate(masks)
+    ]
+    return sig.select("id", "sh", *extra, F.explode(F.array(*structs)).alias("cc")).select(
+        "id", "sh", *extra, F.col("cc.chunk").alias("chunk"), F.col("cc.ckey").alias("ckey")
+    )
+
+
+def _chunk_pairs(
+    blocks: DataFrame, masks: list, max_bucket, op_name: str, hamming_type: str
+) -> DataFrame:
+    """The pigeonhole Hamming join behind :func:`simhash_pairs`,
+    :func:`hamming_pairs` and ``similarity.srp_neardup_pairs``: a pair
+    within ``max_hamming = len(masks) - 1`` bits agrees on at least one
+    whole chunk, so candidates come from one equi-join of the
+    :func:`_chunk_explode` rows on (chunk, ckey), capped by
+    :func:`_window_cap` as ``<op_name>.bucket_cap``. Output (id_a, id_b,
+    hamming), id_a < id_b, hamming ≤ max_hamming as ``hamming_type``.
+
+    Each pair is emitted only at its FIRST agreeing chunk (all lower-chunk
+    masks differ) — a cheap bitwise filter in the join's codegen instead
+    of a global distinct, which at corpus scale would shuffle the entire
+    candidate-pair relation a second time."""
+    blocks = _window_cap(blocks, ["chunk", "ckey"], max_bucket, op_name)
+    a, b = blocks.alias("a"), blocks.alias("b")
+    xor = F.col("a.sh").bitwiseXOR(F.col("b.sh"))
+    first_chunk = F.lit(True)
+    for c in range(1, len(masks)):
+        cond = F.lit(True)
+        for c2 in range(c):
+            cond = cond & (xor.bitwiseAND(F.lit(masks[c2])) != 0)
+        first_chunk = F.when(F.col("a.chunk") == c, cond).otherwise(first_chunk)
+    return (
+        a.join(
+            b,
+            (F.col("a.chunk") == F.col("b.chunk"))
+            & (F.col("a.ckey") == F.col("b.ckey")),
+        )
+        .filter((F.col("a.id") < F.col("b.id")) & first_chunk)
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            F.bit_count(xor).cast(hamming_type).alias("hamming"),
+        )
+        .filter(F.col("hamming") <= len(masks) - 1)
+    )
+
+
 def simhash_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1015,7 +1047,6 @@ def simhash_pairs(
     bits: int = 32,
     max_hamming: int = 3,
     cache: bool = True,
-    small_input_bytes: int = SMALL_INPUT_BYTES,
     max_bucket="auto",
     size_hint: int | None = None,
 ) -> DataFrame:
@@ -1052,8 +1083,7 @@ def simhash_pairs(
     recall contract.
     """
     nchunks = max_hamming + 1
-    chunk = bits // nchunks
-    if _use_perrow_signatures(df, small_input_bytes):
+    if _use_perrow_signatures(df):
 
         # ONE SQL string instead of per-bit Column composition: building
         # the 48-bit vote through the Column API costs ~7,300 py4j
@@ -1121,17 +1151,7 @@ def simhash_pairs(
                 2 * F.col(f"s{i}") > F.col("__cnt"), F.lit(1 << i)
             ).otherwise(F.lit(0))
         sig = votes.select("id", sim.alias("sh"), F.col("__nh").alias("__nt"))
-    masks = []
-    for c in range(nchunks):
-        width = chunk if c < nchunks - 1 else bits - chunk * (nchunks - 1)
-        masks.append(((1 << width) - 1) << (c * chunk))
-    chunk_structs = [
-        F.struct(
-            F.lit(c).alias("chunk"),
-            F.col("sh").bitwiseAND(F.lit(masks[c])).alias("ckey"),
-        )
-        for c in range(nchunks)
-    ]
+    masks = _chunk_masks(bits, nchunks)
     # ONE cached relation serves all three consumers (both join sides +
     # the empty-doc branch): the chunk-exploded blocks carry the
     # token-count flag, so the empty branch is a filter on chunk 0 of the
@@ -1140,12 +1160,7 @@ def simhash_pairs(
     # extra stages re-deriving the explode per consumer).
     row_bytes = 48 + 64 / nchunks
     allblocks = _maybe_cache(
-        sig.select(
-            "id", "sh", "__nt", F.explode(F.array(*chunk_structs)).alias("cc")
-        ).select(
-            "id", "sh", "__nt",
-            F.col("cc.chunk").alias("chunk"), F.col("cc.ckey").alias("ckey"),
-        ),
+        _chunk_explode(sig, masks, "__nt"),
         cache,
         footprint_bytes=_cache_footprint(
             df, size_hint and size_hint * nchunks, row_bytes
@@ -1156,29 +1171,7 @@ def simhash_pairs(
         (F.col("chunk") == 0) & (F.coalesce(F.col("__nt"), F.lit(0)) <= 0)
     ).select("id")
     blocks = allblocks.filter(F.col("__nt") > 0).select("id", "sh", "chunk", "ckey")
-    blocks = _window_cap(blocks, ["chunk", "ckey"], max_bucket, "simhash_pairs")
-    a, b = blocks.alias("a"), blocks.alias("b")
-    xor = F.col("a.sh").bitwiseXOR(F.col("b.sh"))
-    # Emit each pair only at its FIRST agreeing chunk (all lower-chunk
-    # masks differ) — a cheap bitwise filter in the join's codegen instead
-    # of a global distinct, which at corpus scale would shuffle the entire
-    # candidate-pair relation a second time.
-    first_chunk = F.lit(True)
-    for c in range(1, nchunks):
-        cond = F.lit(True)
-        for c2 in range(c):
-            cond = cond & (xor.bitwiseAND(F.lit(masks[c2])) != 0)
-        first_chunk = F.when(F.col("a.chunk") == c, cond).otherwise(first_chunk)
-    main = (
-        a.join(b, (F.col("a.chunk") == F.col("b.chunk")) & (F.col("a.ckey") == F.col("b.ckey")))
-        .filter((F.col("a.id") < F.col("b.id")) & first_chunk)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(xor).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    main = _chunk_pairs(blocks, masks, max_bucket, "simhash_pairs", "int")
     emin = empty_ids.agg(F.min("id").alias("id_a"))
     star = (
         empty_ids.crossJoin(F.broadcast(emin))
@@ -1204,8 +1197,8 @@ def hamming_pairs(
     size_hint: int | None = None,
 ) -> DataFrame:
     """Pairs within Hamming distance ≤ ``max_hamming`` over an ARBITRARY
-    precomputed ``bits``-bit integer hash column — the generic pigeonhole
-    join behind :func:`simhash_pairs`, exposed for hash spaces computed
+    precomputed ``bits``-bit integer hash column — the pigeonhole join of
+    :func:`simhash_pairs` (:func:`_chunk_pairs`), exposed for hash spaces computed
     elsewhere (SimHash votes, SRP sketches, :func:`multimodal.pixel_phash`
     perceptual hashes).
 
@@ -1230,61 +1223,20 @@ def hamming_pairs(
         raise ValueError(
             f"max_hamming + 1 ({nchunks}) must be <= bits ({bits})"
         )
-    chunk = bits // nchunks
-    masks = []
-    for c in range(nchunks):
-        width = chunk if c < nchunks - 1 else bits - chunk * (nchunks - 1)
-        m = ((1 << width) - 1) << (c * chunk)
-        # a top chunk reaching bit 63 wraps to the signed BIGINT literal
-        # (two's complement — bitwiseAND is unaffected)
-        masks.append(m if m < 1 << 63 else m - (1 << 64))
     src = df.filter(F.col(hash_col).isNotNull()).select(
         F.col(id_col).alias("id"), F.col(hash_col).alias("sh")
     )
-    chunk_structs = [
-        F.struct(
-            F.lit(c).alias("chunk"),
-            F.col("sh").bitwiseAND(F.lit(masks[c])).alias("ckey"),
-        )
-        for c in range(nchunks)
-    ]
+    masks = _chunk_masks(bits, nchunks)
     row_bytes = 48 + 64 / nchunks
     blocks = _maybe_cache(
-        src.select(
-            "id", "sh", F.explode(F.array(*chunk_structs)).alias("cc")
-        ).select(
-            "id", "sh",
-            F.col("cc.chunk").alias("chunk"), F.col("cc.ckey").alias("ckey"),
-        ),
+        _chunk_explode(src, masks),
         cache,
         footprint_bytes=_cache_footprint(
             df, size_hint and size_hint * nchunks, row_bytes
         ),
         row_bytes=row_bytes,
     )
-    blocks = _window_cap(blocks, ["chunk", "ckey"], max_bucket, "hamming_pairs")
-    a, b = blocks.alias("a"), blocks.alias("b")
-    xor = F.col("a.sh").bitwiseXOR(F.col("b.sh"))
-    first_chunk = F.lit(True)
-    for c in range(1, nchunks):
-        cond = F.lit(True)
-        for c2 in range(c):
-            cond = cond & (xor.bitwiseAND(F.lit(masks[c2])) != 0)
-        first_chunk = F.when(F.col("a.chunk") == c, cond).otherwise(first_chunk)
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.ckey") == F.col("b.ckey")),
-        )
-        .filter((F.col("a.id") < F.col("b.id")) & first_chunk)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(xor).cast("long").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return _chunk_pairs(blocks, masks, max_bucket, "hamming_pairs", "long")
 
 
 def connected_components(
@@ -1680,15 +1632,9 @@ def ngram_containment_pairs(
         footprint_bytes=_cache_footprint(df),
     )
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, F.col("a.sh") == F.col("b.sh"))
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("intersection"))
-    )
     out = (
-        inter.join(sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a")
+        _shingle_overlaps(sh)
+        .join(sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a")
         .join(sizes.withColumnsRenamed({"id": "id_b", "sz": "sz_b"}), "id_b")
         .withColumn("min_size", F.least("sz_a", "sz_b"))
         .withColumn(
@@ -1990,27 +1936,7 @@ def set_similarity_pairs(
         # analysis surface: the verify-join INPUT (for measuring what
         # the prefix/positional/suffix/bound filters cut), not a result
         return cand
-    out = (
-        cand.join(
-            docs.select(F.col("id").alias("id_a"), F.col("__set").alias("__sa")),
-            "id_a",
-        )
-        .join(
-            docs.select(F.col("id").alias("id_b"), F.col("__set").alias("__sb")),
-            "id_b",
-        )
-        .withColumn(
-            "intersection", F.size(F.array_intersect("__sa", "__sb")).cast("long")
-        )
-        .withColumn(
-            "union_size",
-            (F.size("__sa") + F.size("__sb") - F.col("intersection")).cast("long"),
-        )
-        .filter(
-            F.col("intersection") * td >= F.lit(tn) * F.col("union_size")
-        )
-        .withColumn(
-            "jaccard", F.col("intersection").cast("double") / F.col("union_size")
-        )
-    )
-    return out.select("id_a", "id_b", "intersection", "union_size", "jaccard")
+    out = _jaccard_verify(cand, docs, docs, "__set", dtype="long")
+    return out.filter(
+        F.col("intersection") * td >= F.lit(tn) * F.col("union_size")
+    ).select("id_a", "id_b", "intersection", "union_size", "jaccard")

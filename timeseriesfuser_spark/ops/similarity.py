@@ -29,6 +29,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from timeseriesfuser_spark.ops.dedup import (
+    _chunk_explode,
+    _chunk_masks,
+    _chunk_pairs,
+    _maybe_cache,
+    _use_perrow_signatures,
+    _window_cap,
+    md5_hash64,
+)
 from timeseriesfuser_spark.ops.util import spread_kernel_input, spread_small_input
 
 
@@ -483,8 +492,6 @@ def srp_neardup_pairs(
     candidate join touches only chunk-bucket collisions, never the corpus
     square. Output (id_a, id_b, hamming, cosine), id_a < id_b.
     """
-    from timeseriesfuser_spark.ops.dedup import _window_cap
-
     spark = df.sparkSession
     # materialize=False: the dim probe right below computes ONE cached
     # partition (limit-1), and the blocks relation's eager count fills
@@ -504,46 +511,9 @@ def srp_neardup_pairs(
         )
     vj = v.filter(F.col("n") > 0) if threshold > 0 else v
     sig = _srp_signatures_from(vj, planes, dim_row["d"])
-    nchunks = max_hamming + 1
-    chunk = planes // nchunks
-    masks = []
-    for c in range(nchunks):
-        width = chunk if c < nchunks - 1 else planes - chunk * (nchunks - 1)
-        masks.append(((1 << width) - 1) << (c * chunk))
-    structs = [
-        F.struct(
-            F.lit(c).alias("chunk"),
-            F.col("sh").bitwiseAND(F.lit(masks[c])).alias("ckey"),
-        )
-        for c in range(nchunks)
-    ]
-    blocks = _maybe_cache(
-        sig.select("id", "sh", F.explode(F.array(*structs)).alias("cc")).select(
-            "id", "sh", F.col("cc.chunk").alias("chunk"), F.col("cc.ckey").alias("ckey")
-        ),
-        cache,
-    )
-    blocks = _window_cap(
-        blocks, ["chunk", "ckey"], max_bucket, "srp_neardup_pairs"
-    )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    xor = F.col("a.sh").bitwiseXOR(F.col("b.sh"))
-    first_chunk = F.lit(True)
-    for c in range(1, nchunks):
-        cond = F.lit(True)
-        for c2 in range(c):
-            cond = cond & (xor.bitwiseAND(F.lit(masks[c2])) != 0)
-        first_chunk = F.when(F.col("a.chunk") == c, cond).otherwise(first_chunk)
-    cand = (
-        a.join(b, (F.col("a.chunk") == F.col("b.chunk")) & (F.col("a.ckey") == F.col("b.ckey")))
-        .filter((F.col("a.id") < F.col("b.id")) & first_chunk)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(xor).cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    masks = _chunk_masks(planes, max_hamming + 1)
+    blocks = _maybe_cache(_chunk_explode(sig, masks), cache)
+    cand = _chunk_pairs(blocks, masks, max_bucket, "srp_neardup_pairs", "int")
     ja = v.select(F.col("id").alias("id_a"), F.col("v").alias("__va"), F.col("n").alias("__na"))
     jb = v.select(F.col("id").alias("id_b"), F.col("v").alias("__vb"), F.col("n").alias("__nb"))
     cos = F.round(
@@ -561,12 +531,6 @@ def srp_neardup_pairs(
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "hamming", "cosine")
     )
-
-
-def _maybe_cache(df: DataFrame, cache: bool, materialize: bool = True) -> DataFrame:
-    from timeseriesfuser_spark.ops.dedup import _maybe_cache as _mc
-
-    return _mc(df, cache, materialize)
 
 
 #: Default per-block row cap for the blocked-cosine family (mirrors
@@ -928,8 +892,6 @@ def semantic_dedup_pairs(
     v = df.select(
         F.col(id_col).alias("id"), quantized(F.col(vec_col), scale).alias("__v")
     ).withColumn("__n", _sq_norm(F.col("__v")))
-    from timeseriesfuser_spark.ops.dedup import _window_cap
-
     rel = _window_cap(
         _maybe_cache(a.join(v, "id"), True), ["cluster_id"], max_block,
         "semantic_dedup_pairs", split_id="id", default=DEFAULT_MAX_BLOCK,
@@ -993,8 +955,6 @@ def blocked_cosine_pairs(
         F.col(block_col).alias("__b"),
         quantized(F.col(vec_col), scale).alias("__v"),
     ).withColumn("__n", _sq_norm(F.col("__v")))
-    from timeseriesfuser_spark.ops.dedup import _window_cap
-
     rel = _window_cap(
         _maybe_cache(rel.filter(F.col("__n") > 0), cache), ["__b"],
         max_block, "blocked_cosine_pairs", split_id="id",
@@ -1027,10 +987,7 @@ def blocked_cosine_pairs(
     # kernel, whose advantage grows with Σ|block|²·d. Restricted to
     # integral ids so the kernel's id ordering is exactly the JVM's;
     # other id types always use the join formulation.
-    from timeseriesfuser_spark.ops.dedup import _use_perrow_signatures
-    from timeseriesfuser_spark.ops.util import SMALL_INPUT_BYTES
-
-    if not _use_perrow_signatures(df, SMALL_INPUT_BYTES) and isinstance(
+    if not _use_perrow_signatures(df) and isinstance(
         rel.schema["id"].dataType,
         (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
     ):
@@ -2046,7 +2003,6 @@ def embedding_sim_histogram(
     """
     from pyspark import StorageLevel
 
-    from timeseriesfuser_spark.ops.dedup import md5_hash64
     from timeseriesfuser_spark.ops.util import track_persist
 
     if sample_buckets < 1:

@@ -356,6 +356,13 @@ def _from_csv(lines: DataFrame, declared: T.StructType, csv_options) -> DataFram
     return lines.select(F.from_csv("__line", ddl, opts).alias("__r")).select("__r.*")
 
 
+def _record_filter(csv_options) -> Callable[[str], bool]:
+    """Spark's ``filterCommentAndEmpty``: a line is the header or a record
+    only if it is non-blank after Java's trim and is not a comment."""
+    comment = _csv_opts(csv_options).get("comment", "").replace("\0", "")
+    return lambda t: bool(t.strip(_TRIM)) and not (comment and t.startswith(comment))
+
+
 def _read_csv_zip(
     spark: SparkSession, files: List[str], declared: T.StructType, csv_options
 ) -> DataFrame:
@@ -363,13 +370,15 @@ def _read_csv_zip(
     datasources.py:273,328-337). Spark's CSV datasource decompresses gzip
     codecs but not zip archives, so: one ``binaryFile`` row per archive →
     members decompressed and split into data lines inside an Arrow-batched
-    ``mapInPandas`` (bounded batches, headers skipped) → ``from_csv`` does
-    the actual parsing JVM-side with the SAME parser/options semantics as
-    the plain path. Parallelism = #archives; archive bytes never reach the
-    driver."""
+    ``mapInPandas`` (bounded batches; blank and comment lines dropped and
+    each member's first kept line taken as its header, as Spark's CSV
+    reader does) → ``from_csv`` does the actual parsing JVM-side with the
+    SAME parser/options semantics as the plain path. Parallelism =
+    #archives; archive bytes never reach the driver."""
     import pandas as pd  # noqa: F401 (executor-side)
 
     encoding = _encoding(csv_options)
+    is_record = _record_filter(csv_options)
 
     def _lines(it):
         import io
@@ -387,13 +396,11 @@ def _read_csv_zip(
                             txt = io.TextIOWrapper(
                                 raw, encoding=encoding, newline=""
                             )
+                            kept = filter(is_record, (ln.rstrip("\r\n") for ln in txt))
+                            next(kept, None)  # header (validated upstream)
                             buf: List[str] = []
-                            for i, line in enumerate(txt):
-                                if i == 0:
-                                    continue  # header (validated upstream)
-                                line = line.rstrip("\r\n")
-                                if line:
-                                    buf.append(line)
+                            for line in kept:
+                                buf.append(line)
                                 if len(buf) >= 10_000:
                                     yield pd.DataFrame({"__line": buf})
                                     buf = []
@@ -537,18 +544,15 @@ def _last_kept(raw, keep, start: int = 0) -> Optional[Tuple[int, bytes]]:
 
 def _csv_edge(path: str, last: bool, keep) -> Optional[bytes]:
     """The first (or ``last``) data line of one local CSV file, as the
-    source's reader parses it. Plain and gzip files: Spark's CSV reader
-    takes the first line ``keep`` accepts as the header and every later
-    one as data. Zip members: ``_read_csv_zip`` skips each member's first
-    line and keeps every later non-empty one."""
-    zipped = path.endswith(".zip")
-    keep = bool if zipped else keep
+    source's reader parses it: Spark's CSV reader (and ``_read_csv_zip``,
+    per zip member) takes the first line ``keep`` accepts as the header
+    and every later one as data."""
     size = None if path.endswith((".gz", ".zip")) else os.path.getsize(path)
     with _csv_members(path) as members:
         for member in members[::-1] if last else members:
             with member() as raw:
                 kept = ((o, line) for o, line in _lines(raw) if keep(line))
-                header = 0 if zipped else next(kept, (None,))[0]
+                header = next(kept, (None,))[0]
                 if header is None:
                     return None
                 hit = None if last else next((k for k in kept if k[0] > header), None)
@@ -600,9 +604,10 @@ def _csv_edges(spark, src: SourceConfig, first: str, last: str) -> Optional[Data
             list(dict.fromkeys((first, last))), declared[0].names, sep=sep, encoding=encoding
         )
 
-    def keep(line: bytes) -> bool:  # Spark's filterCommentAndEmpty
-        text = line.decode(encoding, "replace")
-        return bool(text.strip(_TRIM)) and not (comment and text.startswith(comment))
+    is_record = _record_filter(src.csv_options)
+
+    def keep(line: bytes) -> bool:
+        return is_record(line.decode(encoding, "replace"))
 
     edges = [_csv_edge(first, False, keep), _csv_edge(last, True, keep)]
     texts = [] if None in edges else [e.decode(encoding, "replace") for e in edges]
